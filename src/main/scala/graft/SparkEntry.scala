@@ -1157,7 +1157,8 @@ object SparkEntry {
     //    (a.txt…z.txt, the reference's output format): write the index
     //    with the exact sink, then answer the query through the
     //    graft-letters DSv2 reader — letter-IN pruning opens only the
-    //    query letters' files. Full write-then-query lifecycle; must equal
+    //    query letters' files, the pushed word lookup emits only the query
+    //    terms' lines. Full write-then-query lifecycle; must equal
     //    the live-postings queries exactly (same oracle SQL).
     "q_search_and_indexed" -> ((s, dir) => {
       val idx = scratch("idx-serve-and", dir)

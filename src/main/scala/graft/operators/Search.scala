@@ -41,11 +41,12 @@ object Search {
     * Scale shape: the query terms' first letters become a
     * `letter IN (...)` predicate the reader consumes at PLANNING time
     * (`SupportsPushDownFilters` → partition pruning) — at most
-    * |distinct first letters| of the 26 files are opened or scheduled;
-    * the residual `word IN` filter cuts each streamed file to the query
-    * terms before the doc-keyed aggregation, and column pruning never
-    * parses what the query doesn't read. Identical output to [[andQuery]]
-    * over the live postings relation (same oracle SQL pins it).
+    * |distinct first letters| of the 26 files are opened; the `word IN`
+    * lookup is consumed by the same reader, so the slice holds at most
+    * |terms| rows and only those rows' ids are ever split. A slice that
+    * small is served as ONE task ([[letterIndexPostings]]): one job, no
+    * shuffle. Identical output to [[andQuery]] over the live postings
+    * relation (same oracle SQL pins it).
     */
   def andQueryFromIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -62,19 +63,27 @@ object Search {
       words: Seq[String]): DataFrame =
     orQuery(letterIndexPostings(spark, indexDir, words), words)
 
-  /** (word, doc_ids) slice of an on-disk letter index, pruned at planning
-    * time to the query terms' first letters.
+  /** (word, doc_ids) slice of an on-disk letter index: the reader opens
+    * only the query terms' letter files and emits only the query terms'
+    * lines, so the slice is at most |terms| rows. It is coalesced to ONE
+    * partition — with a single-partition child the doc-keyed aggregation
+    * and the final sort need no exchange, so the query is one job of one
+    * task. The parallelism given up is at most |distinct first letters|-way
+    * over a bounded handful of posting lists; the fixed per-stage cost of
+    * the three exchanges it removes is what dominated these queries.
     */
   private def letterIndexPostings(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String,
       words: Seq[String]): DataFrame = {
-    val letters = cleanedTerms(words).map(_.substring(0, 1)).distinct
+    val terms = cleanedTerms(words)
     spark.read
       .format("graft-letters")
       .load(indexDir)
-      .where(col("letter").isin(letters: _*))
+      .where(col("letter").isin(terms.map(_.substring(0, 1)).distinct: _*) &&
+        col("word").isin(terms: _*))
       .select(col("word"), col("doc_ids"))
+      .coalesce(1)
   }
 
   /** Conjunctive retrieval served DIRECTLY from the sharded postings

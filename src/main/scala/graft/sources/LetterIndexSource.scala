@@ -35,8 +35,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     `letter = 'x'` / `letter IN (...)` predicates at PLANNING time —
   *     a pruned letter's file is never opened, never scheduled (the same
   *     file-skipping a parquet reader gets from hive partitioning).
-  *     Conjunctions intersect; fully-consumed filters are dropped from
-  *     the residual so Spark doesn't re-evaluate them per row.
+  *   - **Word lookup**: the same push consumes `word = 'w'` /
+  *     `word IN (...)`; each kept file is still streamed, but a line
+  *     whose word is not in the set costs one `indexOf` and one set
+  *     lookup — its ids are never split and no row is built.
+  *   - Equality and IN lists on one column intersect (conjunctive
+  *     filter semantics); both kinds are enforced exactly, so they are
+  *     dropped from the residual and Spark doesn't re-evaluate them per
+  *     row. Any other predicate (`df >= 5`, …) stays residual.
   *   - **Column pruning**: `SupportsPushDownRequiredColumns` — a
   *     `select(word)` never materializes posting arrays (the wide
   *     column), line parsing skips the id split entirely.
@@ -86,44 +92,50 @@ class LetterIndexScanBuilder(dir: String)
 
   private var required: StructType = LetterIndexDataSource.Schema
   private var consumed: Array[Filter] = Array.empty
-  // None = no letter predicate (all 26); Some(set) = intersection of all
-  // pushed letter constraints (conjunctive filter semantics)
+  // None = no predicate on the column; Some(set) = intersection of all
+  // pushed constraints on it (conjunctive filter semantics)
   private var keptLetters: Option[Set[String]] = None
+  private var keptWords: Option[Set[String]] = None
   private var limit: Option[Int] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def letterSet(f: Filter): Option[Set[String]] = f match {
-      case EqualTo("letter", v: String) => Some(Set(v))
-      case In("letter", vs) if vs.forall(_.isInstanceOf[String]) =>
+    def valueSet(column: String)(f: Filter): Option[Set[String]] = f match {
+      case EqualTo(`column`, v: String) => Some(Set(v))
+      case In(`column`, vs) if vs.forall(_.isInstanceOf[String]) =>
         Some(vs.map(_.asInstanceOf[String]).toSet)
       case _ => None
     }
-    val (handled, residual) = filters.partition(letterSet(_).isDefined)
+    def kept(column: String): Option[Set[String]] =
+      filters.flatMap(valueSet(column)).reduceOption(_ intersect _)
+    val (handled, residual) = filters.partition(f =>
+      valueSet("letter")(f).isDefined || valueSet("word")(f).isDefined)
     consumed = handled
-    keptLetters = handled.flatMap(letterSet).reduceOption(_ intersect _)
-    // handled filters are FULLY enforced by pruning (a kept file contains
-    // only its own letter), so they don't go back in the residual
+    keptLetters = kept("letter")
+    keptWords = kept("word")
+    // handled filters are FULLY enforced — letters by pruning (a kept file
+    // contains only its own letter), words by the reader's per-line
+    // lookup — so they don't go back in the residual
     residual
   }
 
   override def pushedFilters(): Array[Filter] = consumed
 
   /** Lines are stored in (df DESC, word ASC) impact order, so a global
-    * LIMIT n is served by the TOP n lines of each kept file — each
+    * LIMIT n is served by the TOP n emitted rows of each kept file — each
     * partition stops parsing (and the id split, the expensive part) after
-    * n lines; Spark applies the global limit above. PARTIAL push: Spark
-    * keeps its own limit operator (return false), the scan just reads
-    * less.
+    * n rows pass the word lookup; Spark applies the global limit above.
+    * PARTIAL push: Spark keeps its own limit operator (return false), the
+    * scan just reads less.
     */
   override def pushLimit(n: Int): Boolean = {
     limit = Some(n)
     false // partial: the scan bounds per-partition rows, Spark finishes
   }
 
-  override def build(): Scan = new LetterIndexScan(dir, required, keptLetters, limit)
+  override def build(): Scan = new LetterIndexScan(dir, required, keptLetters, keptWords, limit)
 }
 
 case class LetterFilePartition(letter: String, path: String) extends InputPartition
@@ -132,15 +144,18 @@ class LetterIndexScan(
     dir: String,
     required: StructType,
     kept: Option[Set[String]],
+    words: Option[Set[String]] = None,
     limit: Option[Int] = None)
   extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String = {
-    val letters = kept.map(_.toSeq.sorted.mkString("{", ",", "}")).getOrElse("*")
+    def set(s: Set[String]) = s.toSeq.sorted.mkString("{", ",", "}")
+    val letters = kept.map(set).getOrElse("*")
+    val ws      = words.map(w => s", words=${set(w)}").getOrElse("")
     val lim     = limit.map(n => s", limit=$n").getOrElse("")
-    s"graft-letters $dir, letters=$letters, columns=${required.fieldNames.mkString(",")}$lim"
+    s"graft-letters $dir, letters=$letters$ws, columns=${required.fieldNames.mkString(",")}$lim"
   }
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -152,25 +167,30 @@ class LetterIndexScan(
       .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new LetterIndexReaderFactory(required, limit)
+    new LetterIndexReaderFactory(required, words, limit)
 }
 
-class LetterIndexReaderFactory(required: StructType, limit: Option[Int] = None)
+class LetterIndexReaderFactory(
+    required: StructType,
+    words: Option[Set[String]] = None,
+    limit: Option[Int] = None)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[LetterFilePartition]
-    new LetterIndexPartitionReader(p.letter, p.path, required, limit)
+    new LetterIndexPartitionReader(p.letter, p.path, required, words, limit)
   }
 }
 
 /** Streams one letter file, parsing `word:[id1 id2 ...]` per line into
   * only the pruned columns — `doc_ids`/`df` skip the id split when
-  * neither is required.
+  * neither is required. A pushed word set is checked on the word alone,
+  * before any id split or row build; `rank` stays the line position.
   */
 class LetterIndexPartitionReader(
     letter: String,
     path: String,
     required: StructType,
+    words: Option[Set[String]] = None,
     limit: Option[Int] = None)
   extends PartitionReader[InternalRow] {
 
@@ -179,21 +199,34 @@ class LetterIndexPartitionReader(
   private val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
     new java.io.FileInputStream(path), "UTF-8"))
   private var rank = 0
+  private var emitted = 0
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     // pushed limit: the file is in (df DESC, word ASC) serving order, so
-    // the global top-n is within each file's first n lines — stop parsing
-    // (and the id split) beyond them
-    if (limit.exists(rank >= _)) return false
-    val line = reader.readLine()
-    if (line == null) return false
-    rank += 1
-    val colon = line.indexOf(':')
-    require(colon > 0 && line.length >= colon + 3 &&
-      line.charAt(colon + 1) == '[' && line.endsWith("]"),
-      s"malformed index line in $path: '$line'")
-    val word = line.substring(0, colon)
+    // the global top-n is within each file's first n EMITTED rows — stop
+    // parsing (and the id split) beyond them. Counting lines read instead
+    // would stop `where(word = w).limit(1)` before it reaches w.
+    if (limit.exists(emitted >= _)) return false
+    var line = reader.readLine()
+    while (line != null) {
+      rank += 1
+      val colon = line.indexOf(':')
+      require(colon > 0 && line.length >= colon + 3 &&
+        line.charAt(colon + 1) == '[' && line.endsWith("]"),
+        s"malformed index line in $path: '$line'")
+      val word = line.substring(0, colon)
+      if (words.forall(_.contains(word))) {
+        emitted += 1
+        current = row(word, line, colon)
+        return true
+      }
+      line = reader.readLine()
+    }
+    false
+  }
+
+  private def row(word: String, line: String, colon: Int): InternalRow = {
     val (ids, df) =
       if (!needIds) (Array.empty[Long], 0)
       else {
@@ -208,8 +241,7 @@ class LetterIndexPartitionReader(
       "word"    -> UTF8String.fromString(word),
       "doc_ids" -> ArrayData.toArrayData(ids),
       "df"      -> df)
-    current = InternalRow.fromSeq(required.fieldNames.map(all(_)).toIndexedSeq)
-    true
+    InternalRow.fromSeq(required.fieldNames.map(all(_)).toIndexedSeq)
   }
 
   override def get(): InternalRow = current

@@ -8,8 +8,9 @@ import graft.operators.{InvertedIndex, Search, Tokenize}
 
 /** [[Search.andQueryFromIndex]] / [[Search.orQueryFromIndex]]: boolean
   * retrieval served from the ON-DISK letter index (the reference's
-  * a.txt…z.txt output format) must equal the live-postings queries, and
-  * the letter pruning must happen at planning time.
+  * a.txt…z.txt output format) must equal the live-postings queries under
+  * any shuffle-partition count or AQE setting, and the letter and word
+  * pruning must happen at planning time.
   */
 class IndexServeSpec extends SparkSpec {
 
@@ -65,5 +66,54 @@ class IndexServeSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("letters={j,q,s}"),
       s"scan must open only the query terms' letter files:\n$plan")
+    val orPlan = Search.orQueryFromIndex(spark, indexDir, Seq("Spark,", "spark", "query"))
+      .queryExecution.executedPlan.toString
+    assert(orPlan.contains("letters={q,s}, words={query,spark}"),
+      s"scan must read only the cleaned, distinct query terms:\n$orPlan")
+    // no usable term: the empty IN lists fold to an empty relation during
+    // optimization, so no letter file is opened and no job runs
+    val none = Search.andQueryFromIndex(spark, indexDir, Seq("!!", "..."))
+    val nonePlan = none.queryExecution.executedPlan.toString
+    assert(none.collect().isEmpty && nonePlan.contains("LocalTableScan <empty>") &&
+      !nonePlan.contains("BatchScan"), s"an all-punctuation query must open no letter file:\n$nonePlan")
+  }
+
+  /** Query term lists: 1, 2 and 3 letter files, an absent term, a
+    * capitalized and punctuated duplicate, and no usable term at all.
+    */
+  private val cases = Seq(
+    Seq("spark", "stream", "sort"),
+    Seq("spark", "query"),
+    Seq("spark", "query", "join"),
+    Seq("spark", "zzqx"),
+    Seq("Spark,", "spark", "JOIN!"),
+    Seq("!!", "..."))
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("index-served == live-postings on edge-case terms, at 1 vs 8 partitions and AQE off") {
+    val confs = Seq(
+      Seq("spark.sql.shuffle.partitions" -> "1"),
+      Seq("spark.sql.shuffle.partitions" -> "8"),
+      Seq("spark.sql.adaptive.enabled" -> "false"))
+    for (words <- cases) {
+      val runs = confs.map { c =>
+        withConf(c: _*) {
+          val and = Search.andQueryFromIndex(spark, indexDir, words).collect().toSeq
+          val or  = Search.orQueryFromIndex(spark, indexDir, words).collect().toSeq
+          assert(and == Search.andQuery(postings, words).collect().toSeq, s"AND $words under $c")
+          assert(or == Search.orQuery(postings, words).collect().toSeq, s"OR $words under $c")
+          (and, or)
+        }
+      }
+      assert(runs.distinct.size == 1, s"$words: rows differ across configurations")
+      val usable = words.exists(_.exists(_.isLetter))
+      assert(runs.head._2.nonEmpty == usable, s"OR $words")
+    }
   }
 }

@@ -3,11 +3,16 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.functions._
+
+import graft.operators.{InvertedIndex, Tokenize}
 
 /** [[graft.sources.LetterIndexDataSource]]: the golden letter files read
   * back as a table — content parity with the raw files, letter pruning at
-  * planning time, column pruning at the scan.
+  * planning time, column pruning at the scan. The word-lookup tests read an
+  * index built from the bundled test data, so they run on every host.
   */
 class LetterIndexReadSpec extends SparkSpec {
 
@@ -81,5 +86,74 @@ class LetterIndexReadSpec extends SparkSpec {
     val orig = postings
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     assert(back == orig, "writeExact -> graft-letters roundtrip must be lossless")
+  }
+
+  private lazy val builtDir: String = {
+    val out = Files.createTempDirectory("graft-letters-words").toString
+    graft.sources.LetterSink.writeExact(
+      InvertedIndex.postings(Tokenize.tokens(
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "text", Seq("doc_id"))),
+      out)
+    out
+  }
+
+  private def built = spark.read.format("graft-letters").load(builtDir)
+
+  private def key(r: Row) = (r.getString(0), r.getInt(1), r.getString(2), r.getSeq[Long](3), r.getInt(4))
+
+  /** Every row of the built index, read without any pushed predicate. */
+  private lazy val fullScan = built.collect().map(key).toSeq
+
+  /** The deepest line of s.txt: a word that is never its file's first line. */
+  private lazy val deep = fullScan.filter(_._1 == "s").maxBy(_._2)
+
+  test("pushed word = / IN return exactly the matching rows, with file rank and df") {
+    assert(deep._2 > 1)
+    val words = Seq(deep._3, "query", "zzqx") // zzqx is in no document
+    val got = built.where(col("word").isin(words: _*))
+    val plan = got.queryExecution.executedPlan
+    assert(plan.collect { case f: FilterExec => f }.isEmpty,
+      s"the word IN filter must be consumed by the scan:\n$plan")
+    assert(got.collect().map(key).sortBy(_._3).toSeq ==
+      fullScan.filter(r => words.contains(r._3)).sortBy(_._3))
+    assert(got.count() == 2)
+    assert(built.where(col("word") === deep._3).collect().map(key).toSeq == Seq(deep))
+    // IN lists on one column intersect, like the letter sets
+    val both = built.where(col("word").isin("query", "spark") && col("word").isin("spark", "stream"))
+    assert(both.queryExecution.executedPlan.toString.contains("words={spark}"))
+    assert(both.collect().map(key).toSeq == fullScan.filter(_._3 == "spark"))
+  }
+
+  test("a pushed limit counts emitted rows, not lines read") {
+    val top = built.where(col("word") === deep._3).limit(1)
+    val plan = top.queryExecution.executedPlan.toString
+    assert(plan.contains("limit=1") && plan.contains(s"words={${deep._3}}"),
+      s"word set and limit must both reach the scan:\n$plan")
+    assert(top.collect().map(key).toSeq == Seq(deep),
+      s"${deep._3} is line ${deep._2} of s.txt; a line-counting limit stops at line 1")
+    // the two deepest lines of s.txt: a limit that counts lines read stops
+    // after the first of them
+    val two = fullScan.filter(_._1 == "s").sortBy(_._2).takeRight(2)
+    assert(two.head._2 > 2)
+    val both = built.where(col("word").isin(two.map(_._3): _*)).limit(2)
+    assert(both.queryExecution.executedPlan.toString.contains("limit=2"))
+    assert(both.collect().map(key).sortBy(_._2).toSeq == two)
+  }
+
+  test("a df predicate stays residual next to a pushed word set") {
+    val sample = fullScan.take(30)
+    val words = sample.map(_._3)
+    val cut = sample.map(_._5).sorted.apply(15)
+    val hot = built.where(col("word").isin(words: _*) && col("df") >= cut)
+    val plan = hot.queryExecution.executedPlan.toString
+    assert("Filter .*df".r.findFirstIn(plan).nonEmpty, s"df must be filtered above the scan:\n$plan")
+    assert(hot.collect().map(key).sortBy(_._3).toSeq ==
+      fullScan.filter(r => words.contains(r._3) && r._5 >= cut).sortBy(_._3))
+  }
+
+  test("the EXPLAIN scan line lists the pushed words") {
+    val explain = built.where(col("word").isin("spark", "join")).queryExecution.simpleString
+    val scan = explain.linesIterator.find(_.contains("BatchScan")).getOrElse(fail(explain))
+    assert(scan.contains("words={join,spark}"), explain)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{InvertedIndex, Tokenize}
+import graft.operators.{InvertedIndex, Search, Tokenize}
 
 /** Pins the SHAPE of the hot plans, not just their results: shuffle count is
   * the thing that decides whether a pipeline survives a 100x scale-up, so a
@@ -28,6 +28,23 @@ class PlanShapeSpec extends SparkSpec {
     val ranked = InvertedIndex.rankedWithinLetters(Engine.indexFromTable(docs))
     assert(exchanges(ranked) == 2,
       s"ranked index should shuffle twice:\n${ranked.queryExecution.executedPlan}")
+  }
+
+  test("index-served AND/OR: words pushed into the scan, no shuffle; live AND keeps its shuffles") {
+    val terms = Seq("spark", "query", "join")
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-shape-idx").toString
+    graft.sources.LetterSink.writeExact(Engine.indexFromTable(docs), dir)
+    for (q <- Seq(Search.andQueryFromIndex(spark, dir, terms), Search.orQueryFromIndex(spark, dir, terms))) {
+      val plan = q.queryExecution.executedPlan.toString
+      assert(exchanges(q) == 0, s"the pruned slice must be served as one task:\n$plan")
+      assert(plan.contains("letters={j,q,s}, words={join,query,spark}"),
+        s"letters and words must both reach the scan:\n$plan")
+    }
+    // the live-postings query stays distributed: the postings agg on word
+    // (which already clusters the (doc_id, word) distinct), the doc_id
+    // count and the range-partitioned sort
+    val live = Search.andQuery(Engine.indexFromTable(docs), terms)
+    assert(exchanges(live) == 3, s"live AND should shuffle 3x:\n${live.queryExecution.executedPlan}")
   }
 
   test("tokenize + quality metrics are shuffle-free (pure map-side)") {

@@ -7,9 +7,11 @@ import graft.sources.{LetterSink, ManifestSource}
 
 /** End-to-end inverted-index pipeline: the whole reference program
   * (manifest → tokenize → group → rank → 26 letter files) as one declarative
-  * Spark plan. The two pthread barriers of the reference become the two
-  * shuffle exchanges (word hash-partitioning for the aggregate; letter
-  * partitioning for the ranked sort) — see SURVEY §3.
+  * Spark plan. The reference's first pthread barrier becomes the one shuffle
+  * exchange (word hash-partitioning for the aggregate); its second, before
+  * the per-letter rank, becomes the collect to the driver, where
+  * [[graft.sources.LetterSink.writeExact]] ranks each letter's rows and
+  * writes the files in order, as the reference does — see SURVEY §3.
   */
 object Engine {
 

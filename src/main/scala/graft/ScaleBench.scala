@@ -1092,12 +1092,13 @@ object ScaleBench {
       // task 8): the reference corpus's 355 files each listed f times —
       // every replica is a distinct document (positional ids), so postings
       // lists grow ×f at constant vocabulary. Times the two sinks over the
-      // SAME materialized postings: writeExact's driver-side collect is
-      // index-sized (vocab × postings — grows ×f here), writePartitioned
-      // streams through the 26-way partitioned text write. The line is
-      // what turns LetterSink's "bounded collect" comment into a measured
-      // curve; if exact_sec bends superlinearly, prefer the partitioned
-      // sink at scale.
+      // SAME materialized postings: writeExact collects the index unsorted
+      // and ranks each letter on the driver, so its cost is index-sized
+      // (vocab × postings — grows ×f here) and single-threaded;
+      // writePartitioned ranks inside its 26-way partitioned text write.
+      // The line is what turns LetterSink's "bounded collect" comment into
+      // a measured curve; if exact_sec bends superlinearly, prefer the
+      // partitioned sink at scale.
       if (want("index_build")) {
       val baseDir = "/root/reference/checker"
       val names = java.nio.file.Files

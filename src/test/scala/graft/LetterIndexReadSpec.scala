@@ -151,6 +151,26 @@ class LetterIndexReadSpec extends SparkSpec {
       fullScan.filter(r => words.contains(r._3) && r._5 >= cut).sortBy(_._3))
   }
 
+  test("letter pushdown prunes files at planning time; residual filters survive, on the built index") {
+    val one = built.where(col("letter") === "q")
+    val plan = one.queryExecution.executedPlan.toString
+    assert(plan.contains("letters={q}"), s"scan must advertise the pruned letter set:\n$plan")
+    val qRows = one.collect()
+    assert(qRows.nonEmpty, "the built index has q words")
+    assert(qRows.forall(_.getString(0) == "q"))
+    assert(qRows.map(key).sortBy(_._2).toSeq == fullScan.filter(_._1 == "q").sortBy(_._2))
+    val none = built.where(col("letter").isin("a", "b") && col("letter") === "c")
+    assert(none.queryExecution.executedPlan.toString.contains("letters={}"),
+      "contradictory letter predicates must prune everything at planning time")
+    assert(none.collect().isEmpty)
+    val hot = built.where(col("letter") === "t" && col("df") >= 5)
+    assert("Filter .*df".r.findFirstIn(hot.queryExecution.executedPlan.toString).nonEmpty,
+      "the df filter must stay above the scan")
+    val hotRows = hot.collect()
+    assert(hotRows.nonEmpty, "the built index has t words with df >= 5")
+    assert(hotRows.forall(r => r.getString(0) == "t" && r.getInt(4) >= 5))
+  }
+
   test("the EXPLAIN scan line lists the pushed words") {
     val explain = built.where(col("word").isin("spark", "join")).queryExecution.simpleString
     val scan = explain.linesIterator.find(_.contains("BatchScan")).getOrElse(fail(explain))

@@ -1,15 +1,25 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{InvertedIndex, Tokenize}
 import graft.sources.LetterSink
 
-/** The distributed letter sink must produce a letter-partitioned layout that
-  * supports partition pruning on read — the at-scale path where exact
-  * filenames stop mattering and parallel IO + pruning start mattering.
+/** The exact sink must rank and write the 26 letter files byte-for-byte like
+  * the reference, on every host: a hand-built corpus under
+  * `src/test/resources/ranking` is checked against a plain-Scala model of
+  * the reference, and the sink's job shape is pinned. The distributed sink
+  * must produce a letter-partitioned layout that supports partition pruning
+  * on read — the at-scale path where exact filenames stop mattering and
+  * parallel IO + pruning start mattering.
   */
 class LetterSinkSpec extends SparkSpec {
 
@@ -113,5 +123,166 @@ class LetterSinkSpec extends SparkSpec {
         assert(now == baseSnapshot(ch), s"$tag: merge mutated the input snapshot ($ch.txt)")
       }
     }
+  }
+
+  /** The reference program in plain Scala, for the ranking golden tests:
+    * FIXTURES §4 tokenizer (whitespace split, byte-wise lowercase, keep the
+    * [a-z] bytes, drop empties), one posting set per word, and 26 letter
+    * files ranked df DESC then word by unsigned UTF-8 bytes, each line
+    * `word:[ids]` plus a newline, an empty file for an empty letter.
+    */
+  private object Model {
+    def tokens(text: String): Seq[String] =
+      text.split("[ \t\n\u000B\f\r]+").toSeq
+        .map(t => new String(t.getBytes(UTF_8)
+          .map(b => if (b >= 'A' && b <= 'Z') (b + 32).toByte else b)
+          .filter(b => b >= 'a' && b <= 'z'), UTF_8))
+        .filter(_.nonEmpty)
+
+    def postings(docs: Seq[(Long, String)]): Map[String, Set[Long]] =
+      docs.flatMap { case (id, text) => tokens(text).map(_ -> id) }
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+
+    def merge(a: Map[String, Set[Long]], b: Map[String, Set[Long]]): Map[String, Set[Long]] =
+      (a.keySet ++ b.keySet).map(w => w -> (a.getOrElse(w, Set.empty) ++ b.getOrElse(w, Set.empty))).toMap
+
+    def files(index: Map[String, Set[Long]]): Map[Char, String] =
+      ('a' to 'z').map { ch =>
+        val lines = index.toSeq.filter(_._1.startsWith(ch.toString))
+          .sortWith { case ((w1, ids1), (w2, ids2)) =>
+            if (ids1.size != ids2.size) ids1.size > ids2.size
+            else java.util.Arrays.compareUnsigned(w1.getBytes(UTF_8), w2.getBytes(UTF_8)) < 0
+          }
+          .map { case (w, ids) => s"$w:[${ids.toSeq.sorted.mkString(" ")}]\n" }
+        ch -> lines.mkString
+      }.toMap
+  }
+
+  private val rankingDir = Paths.get(getClass.getResource("/ranking/manifest.txt").toURI).getParent
+
+  /** The corpus documents with the manifest's positional 1-based ids. */
+  private lazy val rankingDocs: Seq[(Long, String)] = {
+    val manifest = new String(Files.readAllBytes(rankingDir.resolve("manifest.txt")), UTF_8)
+      .split("\\s+").filter(_.nonEmpty)
+    manifest.slice(1, 1 + manifest(0).toInt).toSeq.zipWithIndex.map { case (f, i) =>
+      (i + 1L) -> new String(Files.readAllBytes(rankingDir.resolve(f)), UTF_8)
+    }
+  }
+
+  private lazy val deltaDocs: Seq[(Long, String)] =
+    new String(Files.readAllBytes(rankingDir.resolve("delta.tsv")), UTF_8)
+      .split('\n').filter(_.nonEmpty).toSeq
+      .map { l => val Array(id, text) = l.split('\t'); id.toLong -> text }
+
+  private def rankingPostings =
+    Engine.indexFromManifest(spark, rankingDir.resolve("manifest.txt").toString, rankingDir.toString)
+
+  private def deltaPostings = {
+    import spark.implicits._
+    InvertedIndex.postings(Tokenize.tokens(deltaDocs.toDF("doc_id", "text"), "text", Seq("doc_id")))
+  }
+
+  private def assertFiles(dir: String, paths: Seq[String], want: Map[Char, String]): Unit = {
+    assert(paths == ('a' to 'z').map(ch => Paths.get(dir, s"$ch.txt").toString))
+    ('a' to 'z').foreach { ch =>
+      val got = Files.readAllBytes(Paths.get(dir, s"$ch.txt"))
+      assert(got.sameElements(want(ch).getBytes(UTF_8)),
+        s"$ch.txt:\n${new String(got, UTF_8)}--- want:\n${want(ch)}")
+    }
+  }
+
+  test("writeExact == the plain-Scala reference model, byte for byte, on the hand-built corpus") {
+    val want = Model.files(Model.postings(rankingDocs))
+    // the model itself, pinned on the cases the corpus was built for: a df
+    // tie broken by word (bag < ban < bat), a higher df above an earlier
+    // word (cow above cab), a prefix before its extension (ab < abc), the
+    // FIXTURES §4 tokenizer rows, and empty letters
+    assert(want('a') == "ab:[1 2]\nabc:[1 2]\nabcdef:[3]\n")
+    assert(want('b') == "bag:[1 2]\nban:[3 4]\nbat:[1 2]\n")
+    assert(want('c') == "cow:[1 2 3]\ncab:[1]\ncafs:[2]\n")
+    assert(Seq('d', 'h', 'q', 'r', 'w', 'x').map(want) ==
+      Seq("dont:[1]\n", "hello:[3]\n", "quoted:[3]\n", "rd:[3]\n", "wellknown:[2]\n", "xyz:[2]\n"))
+    assert(Seq('e', 'n', 's', 'y').forall(want(_).isEmpty))
+    val out = Files.createTempDirectory("graft-rank-golden").toString
+    assertFiles(out, LetterSink.writeExact(rankingPostings, out), want)
+  }
+
+  test("mergeExact == the model's merged index, byte for byte, on the hand-built corpus") {
+    val base = Files.createTempDirectory("graft-rank-base").toString
+    LetterSink.writeExact(rankingPostings, base)
+    val want = Model.files(Model.merge(Model.postings(rankingDocs), Model.postings(deltaDocs)))
+    // the delta reorders a bucket (abc now outranks ab) and fills an empty one (n)
+    assert(want('a') == "abc:[1 2 6]\nab:[1 2]\nabcdef:[3]\n")
+    assert(want('n') == "nd:[7]\n")
+    val out = Files.createTempDirectory("graft-rank-merged").toString
+    assertFiles(out, LetterSink.mergeExact(spark, base, deltaPostings, out), want)
+  }
+
+  test("writeExact ranks words in Spark's binary UTF-8 order and drops letters outside a-z") {
+    import spark.implicits._
+    // U+FF21 sorts before U+1F600 in UTF-8 bytes (EF.. < F0..) but after it
+    // in UTF-16 code units (FF21 > D83D): String.compareTo would swap them
+    val words = Seq("ab" -> 3L, "aＡ" -> 1L, "a😀" -> 2L, "b" -> 1L, "b" -> 2L,
+      "bＡ" -> 1L, "bＡ" -> 2L, "Zed" -> 4L, "été" -> 5L, "" -> 6L)
+    val want = Model.files(words.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap)
+    assert(want('a') == "ab:[3]\naＡ:[1]\na😀:[2]\n")
+    val out = Files.createTempDirectory("graft-rank-utf8").toString
+    val postings = InvertedIndex.postings(words.map(_.swap).toDF("doc_id", "word"))
+    assertFiles(out, LetterSink.writeExact(postings, out), want)
+  }
+
+  /** The jobs Spark started for `body` and every physical plan it described
+    * (each SQL execution's initial plan and each adaptive re-plan), seen by
+    * a SparkListener.
+    */
+  private def jobsAndPlans(body: => Unit): (Int, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"letter-sink-shape-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val jobs = new AtomicInteger
+    val plans = new ConcurrentLinkedQueue[String]
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          else if (g == marker) drained.countDown()
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "letter sink shape")
+      body
+      // a listener sees events in the order they were posted, so once the
+      // marker job's start arrives, every event of `body` has arrived
+      sc.setJobGroup(marker, "letter sink shape drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, plans.asScala.toSeq)
+  }
+
+  test("writeExact runs 2 jobs and mergeExact 3, with no range partitioning: the driver ranks") {
+    val base = Files.createTempDirectory("graft-shape-base").toString
+    val (writeJobs, writePlans) = jobsAndPlans(LetterSink.writeExact(rankingPostings, base))
+    val out = Files.createTempDirectory("graft-shape-merged").toString
+    val (mergeJobs, mergePlans) = jobsAndPlans(LetterSink.mergeExact(spark, base, deltaPostings, out))
+    for ((name, plans) <- Seq("writeExact" -> writePlans, "mergeExact" -> mergePlans)) {
+      assert(plans.nonEmpty, s"$name: no plan was observed")
+      plans.foreach(p => assert(!p.toLowerCase.contains("rangepartitioning"), s"$name plan sorts globally:\n$p"))
+    }
+    // writeExact: the aggregate's shuffle map stage, then one collect;
+    // mergeExact: the shuffle map stages of the delta aggregate and of the
+    // index read (the join's other side), then one collect
+    assert(writeJobs == 2, s"writeExact jobs\n${writePlans.mkString("\n")}")
+    assert(mergeJobs == 3, s"mergeExact jobs\n${mergePlans.mkString("\n")}")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Per-round benchmark: every SparkEntry query + the flagship index build,
   * executed to completion through the noop sink (count() alone can let
@@ -31,27 +31,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // getOrCreate() silently ignores withExtensions when any session is
-    // already active — detach first so the measured session really carries
-    // the engine's optimizer rule + sorted_set_agg (same pattern as
-    // ExtensionsSpec).
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the ref corpus is 355 individual paths: above the default
-      // parallelPartitionDiscovery threshold (32) Spark launches a listing
-      // JOB with one task per path — pure scheduling overhead for small
-      // path sets; list driver-side instead
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus  = GraftSession.cpus
+    val spark = GraftSession(s"local[$cpus]", cpus)
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime()

@@ -522,16 +522,7 @@ object ExplainAudit {
     val outFile = args.headOption.getOrElse(
       sys.error("usage: runMain graft.ExplainAudit <outFile> [sfDir]"))
     val sfDir   = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val round = outFile.replaceAll("""^.*EXPLAIN_r0*(\d+).*$""", "$1")

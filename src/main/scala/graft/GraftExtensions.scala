@@ -9,7 +9,7 @@ import graft.plans.{BottomKSampleAgg, CleanToken, CountMinAgg, HllNdvAgg, KmvNdv
 /** Engine extensions, installable on any session:
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  *   GraftSession("local[4]", 4)  // every graft main and test session
   *   // or: --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   *

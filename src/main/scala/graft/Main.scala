@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** User-facing CLI for the flagship job — the Spark analogue of the
   * reference binary's `./tema1 <mappers> <reducers> <input_file>`
   * (/root/reference/src/main.cpp:9-42,266-325): build the inverted index
@@ -47,20 +45,7 @@ object Main {
     }
     val baseDir = new java.io.File(manifest).getAbsoluteFile.getParent
 
-    // getOrCreate() silently ignores withExtensions when a session is
-    // already active — detach first so the CLI session gets the engine's
-    // optimizer rule + sorted_set_agg (mirrors ExtensionsSpec/Bench)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$parallelism]"))
-      .appName("graft-index-build")
-      .config("spark.sql.shuffle.partitions", parallelism)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", s"local[$parallelism]"), parallelism)
     try {
       val written = Engine.buildIndex(spark, manifest, baseDir, outDir)
       println(s"wrote ${written.size} letter files to $outDir")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Writes `.explain("formatted")` for the named queries to
@@ -9,8 +8,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * Usage: `runMain graft.PlanDump <outDir> <tag> <sfDir> q_a q_b ...`
   *
-  * Same session surface as Bench (extensions, AQE, shuffle partitions =
-  * SPARK_GRAFT_CPUS) so the dumped initial plan is the one the bench runs.
+  * Same session as Bench ([[GraftSession]] on `GraftSession.cpus` cores)
+  * so the dumped initial plan is the one the bench runs.
   * Iterative queries (the dedup-groups family) execute their loop during
   * DataFrame construction; their dumped plan is the final served relation,
   * matching the EXPLAIN_r{N} convention.
@@ -21,19 +20,8 @@ object PlanDump {
     val tag    = args(1)
     val sfDir  = args(2)
     val names  = args.drop(3)
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus   = GraftSession.cpus
+    val spark  = GraftSession(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

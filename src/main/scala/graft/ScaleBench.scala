@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity, Tokenize}
@@ -43,7 +43,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir   = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factors = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 10, 50)
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus    = GraftSession.cpus
     val cap     = 1 << 12
     // optional pipeline filter (comma list of pipeline names): re-run a
     // subset without paying the whole sweep — e.g. a memory-hungry
@@ -52,20 +52,7 @@ object ScaleBench {
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def want(p: String): Boolean = only.forall(_.contains(p))
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // reliable-checkpoint files are deleted as their RDDs get GC'd, so a
-      // long sweep doesn't accumulate the per-factor scratch on disk
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus)
     // disk-backed materialization for the iterative graph loops: at factor
     // 50 the replicated edge relation is ~55M rows, and an eager
     // localCheckpoint pins every block in this single JVM's block manager —

@@ -30,7 +30,8 @@ object InvertedIndex {
   /** Rank postings within each letter bucket by df DESC, word ASC
     * (reference comparator src/main.cpp:225-231). Returns a DataFrame whose
     * partitioning is 26-way by letter with rows sorted inside each bucket —
-    * the distributed analogue of the reference's per-letter sort stage.
+    * the distributed analogue of the reference's per-letter sort stage, and
+    * the ranking [[graft.sources.LetterSink.writePartitioned]] writes.
     */
   def rankedWithinLetters(postings: DataFrame): DataFrame =
     postings

@@ -16,12 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Tokenize {
 
-  /** Regex equivalent of the reference's per-byte `isalpha` filter after
-    * lowercasing — kept for documentation/oracle purposes; the hot path uses
-    * the native [[graft.plans.CleanToken]] expression below.
-    */
-  val NonAlpha = "[^a-z]"
-
   /** Clean one raw token: byte-wise lowercase + keep-[a-z] via the native
     * codegen'd CleanToken expression — the reference's exact per-byte loop
     * (one pass, no regex engine; see graft.plans.CleanToken for why this is

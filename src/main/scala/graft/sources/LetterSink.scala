@@ -92,7 +92,8 @@ object LetterSink {
 
   /** Distributed sink: dir-per-letter text write (`letter=a/part-*.txt`).
     *
-    * The in-partition sort leads with `letter` deliberately: the dynamic
+    * Ranks through [[graft.operators.InvertedIndex.rankedWithinLetters]],
+    * whose in-partition sort leads with `letter` deliberately: the dynamic
     * partitioned write requires rows clustered by the partition column,
     * and when the child ordering doesn't already provide that, the
     * planner inserts its OWN sort on `letter` alone — which is not
@@ -100,13 +101,11 @@ object LetterSink {
     * each letter could be scrambled. Leading with `letter` satisfies the
     * write requirement up front, no extra sort is planned, and each
     * letter's file carries the exact reference line order — pinned
-    * byte-equal to [[writeExact]] on both golden corpora by
-    * LetterSinkSpec's parity test.
+    * byte-equal by LetterSinkSpec to the plain-Scala reference model on
+    * the hand-built corpus, and to [[writeExact]] on both golden corpora.
     */
   def writePartitioned(postings: DataFrame, outDir: String): Unit =
-    formatted(postings)
-      .repartition(26, col("letter"))
-      .sortWithinPartitions(asc("letter"), desc("df"), asc("word"))
+    graft.operators.InvertedIndex.rankedWithinLetters(formatted(postings))
       .select("letter", "line")
       .write
       .mode("overwrite")
@@ -123,8 +122,8 @@ object LetterSink {
     * an index roll actually takes (distributed read → one word-keyed
     * full-outer join shuffle → distributed partitioned write; nothing
     * index-sized ever visits the driver). Per-letter content is pinned
-    * byte-equal to [[mergeExact]] on both golden corpora by
-    * LetterSinkSpec.
+    * byte-equal by LetterSinkSpec to the model's merged index on the
+    * hand-built corpus, and to [[mergeExact]] on both golden corpora.
     */
   def mergePartitioned(
       spark: org.apache.spark.sql.SparkSession,

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Mechanical guards over the audit surface itself:
   *
@@ -24,25 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     stay EXACT — an entry whose query stops flagging must be removed,
   *     so stale justifications can't hide a future regression.
   */
-class AuditLintSpec extends AnyFunSuite {
-
-  // own extensions-enabled session: the production queries need the
-  // engine's SQL functions (sorted_set_agg, kmv_ndv, ...)
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-lint-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class AuditLintSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.plans.BloomJoin
@@ -11,22 +10,8 @@ import graft.plans.BloomJoin
   */
 class BloomJoinSpec extends SparkSpec {
 
-  // the bloom functions live in GraftExtensions — build a session that
-  // carries them (getOrCreate() ignores withExtensions if a session is
-  // active, so detach first; same pattern as ExtensionsSpec)
-  private lazy val ext: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
-
   test("bloom-pruned join is row-identical to the plain join") {
-    import ext.implicits._
+    import spark.implicits._
     val big = (1L to 5000L).map(i => (i % 500, s"row$i")).toDF("k", "payload")
     val small = Seq((3L, "a"), (17L, "b"), (444L, "c"), (9999L, "d")).toDF("k", "tag")
     val plain = big.join(small, Seq("k")).collect().map(_.toSeq).toSet
@@ -37,7 +22,7 @@ class BloomJoinSpec extends SparkSpec {
   }
 
   test("the might_contain probe filters the big side below the join") {
-    import ext.implicits._
+    import spark.implicits._
     val big = (1L to 1000L).map(i => (i, i * 2)).toDF("k", "v")
     val small = Seq((1L, "x"), (2L, "y")).toDF("k", "tag")
     val plan = BloomJoin.bloomPrunedJoin(big, small, "k", expectedItems = 16)

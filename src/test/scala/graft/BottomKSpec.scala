@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -11,23 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * definition, no-eviction exactness, order/partitioning independence,
   * unit-level merge fuzz, and batch==streaming.
   */
-class BottomKSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-bottomk-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class BottomKSpec extends SparkSpec {
 
   test("eviction mode == the window-replay definition (row_number over (hash, value) <= k)") {
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.CmsSketch
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,23 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * CMS error bound in practice, order-independence under repartitioning,
   * decomposed-merge identity, and batch==streaming.
   */
-class CmsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-cms-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CmsSpec extends SparkSpec {
 
   private val D = 4
   private val W = 256

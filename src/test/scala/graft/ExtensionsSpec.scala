@@ -1,34 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{InvertedIndex, Tokenize}
 
 /** The custom aggregate + rewrite rule must be result-identical to the
   * two-step sort_array(collect_set(...)) form it replaces.
   */
-class ExtensionsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    // getOrCreate() returns any ACTIVE session and would silently ignore
-    // withExtensions — detach first so this suite always gets its own
-    // extension-enabled session regardless of suite order.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class ExtensionsSpec extends SparkSpec {
 
   private def tokens = Tokenize.tokens(
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "text", Seq("doc_id"))

@@ -1,0 +1,56 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions._
+
+import graft.plans.RewriteSortedCollectSet
+
+/** [[GraftSession]] is the only way a session gets the engine's surface:
+  * the shared test session carries it whichever suite runs first, and the
+  * factory replaces an active plain session instead of returning it.
+  */
+class GraftSessionSpec extends SparkSpec {
+
+  private def hasSortedSetAgg(s: SparkSession): Boolean =
+    s.sessionState.functionRegistry.functionExists(FunctionIdentifier("sorted_set_agg"))
+
+  private def optimizerRules(s: SparkSession): Seq[String] =
+    s.sessionState.optimizer.extendedOperatorOptimizationRules.map(_.ruleName)
+
+  private def assertGraftSurface(s: SparkSession): Unit = {
+    assert(hasSortedSetAgg(s), "sorted_set_agg is not registered")
+    assert(s.range(5).selectExpr("sorted_set_agg(id % 3)").head().getSeq[Long](0) == Seq(0L, 1L, 2L))
+    assert(optimizerRules(s).contains(RewriteSortedCollectSet.ruleName),
+      s"no graft rule among the optimizer rules: ${optimizerRules(s)}")
+  }
+
+  test("the shared test session carries the graft optimizer rules and SQL functions") {
+    assertGraftSurface(spark)
+    val rewritten = spark.range(10).groupBy(col("id") % 3)
+      .agg(sort_array(collect_set(col("id"))))
+      .queryExecution.optimizedPlan.toString
+    assert(rewritten.contains("sorted_set_agg"), s"rewrite rule did not fire:\n$rewritten")
+  }
+
+  test("GraftSession over an active and default plain session returns one with the graft surface") {
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    // built without the factory on purpose: the plain session a caller may
+    // already hold when it asks for a graft one
+    val plain = SparkSession.builder().master("local[4]").getOrCreate()
+    try {
+      assert(SparkSession.getActiveSession.contains(plain) && SparkSession.getDefaultSession.contains(plain))
+      assert(!hasSortedSetAgg(plain) && !optimizerRules(plain).contains(RewriteSortedCollectSet.ruleName))
+      val s = GraftSession("local[4]", 4)
+      assert(s ne plain)
+      assertGraftSurface(s)
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    } finally {
+      SparkSession.setActiveSession(shared)
+      SparkSession.setDefaultSession(shared)
+    }
+  }
+}

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,23 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (ScalaCheck vs BigInt/parseLong) and end-to-end through codegen vs
   * `conv` itself on real md5/sha2 output.
   */
-class HexSliceLongSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-hexslice-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class HexSliceLongSpec extends SparkSpec {
 
   private val hexChar: Gen[Char] = Gen.oneOf("0123456789abcdef".toSeq)
 

@@ -8,25 +8,7 @@ import graft.plans.{HllSketch, KmvSketch}
   * mirror, partitioning/merge-order invariance, the linear-counting
   * branch, accuracy envelope at p = 10, and the 2^61 harmonic-sum bound.
   */
-class HllSpec extends org.scalatest.funsuite.AnyFunSuite {
-
-  // own session: hll_ndv comes from GraftExtensions, which the shared
-  // TestSpark session does not install (the KmvSpec pattern)
-  private lazy val spark: org.apache.spark.sql.SparkSession = {
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s = org.apache.spark.sql.SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-hll-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class HllSpec extends SparkSpec {
   import spark.implicits._
 
   /** In-memory mirror of the whole sketch from raw keys. */

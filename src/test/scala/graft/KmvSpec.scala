@@ -1,30 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.plans.KmvNdvAgg]] (`kmv_ndv`): exact below k, deterministic
   * under repartitioning (the property HLL lacks), and unbiased enough at
   * k=256 over a known key space.
   */
-class KmvSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-kmv-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class KmvSpec extends SparkSpec {
 
   private def sketch(df: org.apache.spark.sql.DataFrame, k: Int) = df
     .agg(expr(s"kmv_ndv(k, $k)").as("r"))

@@ -16,7 +16,8 @@ import graft.sources.LetterSink
 /** The exact sink must rank and write the 26 letter files byte-for-byte like
   * the reference, on every host: a hand-built corpus under
   * `src/test/resources/ranking` is checked against a plain-Scala model of
-  * the reference, and the sink's job shape is pinned. The distributed sink
+  * the reference, for the exact and the distributed sink alike, and the
+  * exact sink's job shape is pinned. The distributed sink
   * must produce a letter-partitioned layout that supports partition pruning
   * on read — the at-scale path where exact filenames stop mattering and
   * parallel IO + pruning start mattering.
@@ -191,6 +192,17 @@ class LetterSinkSpec extends SparkSpec {
     }
   }
 
+  /** A partitioned snapshot holds exactly the letters `want` fills, each
+    * with `want`'s bytes.
+    */
+  private def assertParts(dir: String, want: Map[Char, String]): Unit = {
+    val letters = new java.io.File(dir).list().filter(_.startsWith("letter=")).sorted.toSeq
+    assert(letters == want.filter(_._2.nonEmpty).keys.toSeq.sorted.map(ch => s"letter=$ch"))
+    ('a' to 'z').foreach { ch =>
+      assert(partBytes(dir, ch) == want(ch), s"letter=$ch:\n${partBytes(dir, ch)}--- want:\n${want(ch)}")
+    }
+  }
+
   test("writeExact == the plain-Scala reference model, byte for byte, on the hand-built corpus") {
     val want = Model.files(Model.postings(rankingDocs))
     // the model itself, pinned on the cases the corpus was built for: a df
@@ -205,6 +217,9 @@ class LetterSinkSpec extends SparkSpec {
     assert(Seq('e', 'n', 's', 'y').forall(want(_).isEmpty))
     val out = Files.createTempDirectory("graft-rank-golden").toString
     assertFiles(out, LetterSink.writeExact(rankingPostings, out), want)
+    val part = Files.createTempDirectory("graft-rank-golden-part").toString
+    LetterSink.writePartitioned(rankingPostings, part)
+    assertParts(part, want)
   }
 
   test("mergeExact == the model's merged index, byte for byte, on the hand-built corpus") {
@@ -216,6 +231,9 @@ class LetterSinkSpec extends SparkSpec {
     assert(want('n') == "nd:[7]\n")
     val out = Files.createTempDirectory("graft-rank-merged").toString
     assertFiles(out, LetterSink.mergeExact(spark, base, deltaPostings, out), want)
+    val part = Files.createTempDirectory("graft-rank-merged-part").toString
+    LetterSink.mergePartitioned(spark, base, deltaPostings, part)
+    assertParts(part, want)
   }
 
   test("writeExact ranks words in Spark's binary UTF-8 order and drops letters outside a-z") {

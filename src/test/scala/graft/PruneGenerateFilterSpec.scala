@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextAnalysis
 
@@ -12,23 +10,7 @@ import graft.functions.TextAnalysis
   * when the generator input is a cheap scanned column (where it can prune
   * at the scan), and the rewritten plan must stay result-identical.
   */
-class PruneGenerateFilterSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-prune-gen-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class PruneGenerateFilterSpec extends SparkSpec {
 
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Tokenize
 
@@ -10,25 +8,7 @@ import graft.operators.Tokenize
   * capacity covers the key space, and the classical SpaceSaving guarantees
   * under eviction across a real multi-partition merge tree.
   */
-class SpaceSavingSpec extends AnyFunSuite {
-
-  // own extensions-enabled session (ExtensionsSpec pattern): the shared
-  // TestSpark session does not carry GraftExtensions' SQL functions
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-ss-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class SpaceSavingSpec extends SparkSpec {
 
   test("capacity >= distinct keys: sketch is exact with zero error") {
     val toks = Tokenize.tokens(

@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{InvertedIndex, Tokenize}
-import graft.sources.{LetterSink, ManifestSource}
+import graft.sources.LetterSink
 
 /** End-to-end inverted-index pipeline: the whole reference program
   * (manifest → tokenize → group → rank → 26 letter files) as one declarative
-  * Spark plan. The reference's first pthread barrier becomes the one shuffle
-  * exchange (word hash-partitioning for the aggregate); its second, before
+  * Spark plan. The reference's mappers become the scan: each task tokenizes
+  * its bin of files and emits one partial postings row per distinct word.
+  * The reference's first pthread barrier becomes the one shuffle exchange
+  * (word hash-partitioning for the merge of those rows); its second, before
   * the per-letter rank, becomes the collect to the driver, where
   * [[graft.sources.LetterSink.writeExact]] ranks each letter's rows and
   * writes the files in order, as the reference does — see SURVEY §3.
@@ -16,20 +18,18 @@ import graft.sources.{LetterSink, ManifestSource}
 object Engine {
 
   /** Build postings for a manifest corpus (distributed end of the pipeline).
-    * Reads through the DataSource V2 manifest format: positional ids travel
-    * with the scan partitions — no path join, no driver-side collects on the
-    * read path (the older `ManifestSource.docLines` assembly remains for
-    * comparison and is spec-asserted identical in ManifestV2Spec).
+    * Reads through the `graft-manifest-postings` DataSource V2 scan: one task
+    * per core tokenizes its bin-packed files and dedups (word, file id)
+    * pairs in memory, so no token row is materialized, and
+    * [[InvertedIndex.mergePartials]] merges the per-bin lists after one
+    * shuffle on word. The line path (`graft-manifest` +
+    * [[Tokenize.tokens]] + [[InvertedIndex.postings]]) gives the same rows.
     */
-  def indexFromManifest(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame = {
-    val lines = spark.read
-      .format("graft-manifest")
+  def indexFromManifest(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame =
+    InvertedIndex.mergePartials(spark.read
+      .format("graft-manifest-postings")
       .option("baseDir", baseDir)
-      .load(manifestPath)
-      .select("file_id", "line")
-    val toks = Tokenize.tokens(lines, textCol = "line", keep = Seq("file_id"))
-    InvertedIndex.postings(toks, idCol = "file_id")
-  }
+      .load(manifestPath))
 
   /** Full golden-parity run: write `a.txt`…`z.txt` under `outDir`. */
   def buildIndex(spark: SparkSession, manifestPath: String, baseDir: String, outDir: String): Seq[String] =

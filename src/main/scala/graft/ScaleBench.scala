@@ -1086,8 +1086,10 @@ object ScaleBench {
       // The line is what turns LetterSink's "bounded collect" comment into
       // a measured curve; if exact_sec bends superlinearly, prefer the
       // partitioned sink at scale.
-      if (want("index_build")) {
       val baseDir = "/root/reference/checker"
+      if (want("index_build") && !new java.io.File(s"$baseDir/test.txt").exists())
+        Console.err.println(s"WARN: $baseDir/test.txt missing: skipped index_build (factor $f)")
+      else if (want("index_build")) {
       val names = java.nio.file.Files
         .readAllLines(java.nio.file.Paths.get(s"$baseDir/test.txt"))
         .toArray(Array.empty[String]).toSeq.drop(1)

@@ -19,11 +19,29 @@ object InvertedIndex {
   /** (word, doc_id) token pairs → postings:
     * word, doc_ids (sorted distinct ASC), df (document frequency), letter.
     * Duplicate (word, doc_id) pairs collapse (reference src/main.cpp:188-191).
+    *
+    * This is the line path's aggregate: one input row per token occurrence.
+    * The manifest build ([[graft.Engine.indexFromManifest]]) dedups inside
+    * its scan and finishes with [[mergePartials]] instead; this form serves
+    * table inputs and is the reference the manifest build is tested against.
     */
   def postings(tokens: DataFrame, idCol: String = "doc_id"): DataFrame =
-    tokens
+    withDfAndLetter(tokens
       .groupBy("word")
-      .agg(sort_array(collect_set(col(idCol))).as("doc_ids"))
+      .agg(sort_array(collect_set(col(idCol))).as("doc_ids")))
+
+  /** Partial postings (word, doc_ids) → postings, as [[postings]] gives.
+    * The id lists of one word must be disjoint across rows, as the
+    * `graft-manifest-postings` scan emits them, so the per-word merge is a
+    * sort of the concatenated lists with no dedup.
+    */
+  def mergePartials(partials: DataFrame): DataFrame =
+    withDfAndLetter(partials
+      .groupBy("word")
+      .agg(sort_array(flatten(collect_list(col("doc_ids")))).as("doc_ids")))
+
+  private def withDfAndLetter(postings: DataFrame): DataFrame =
+    postings
       .withColumn("df", size(col("doc_ids")))
       .withColumn("letter", substring(col("word"), 1, 1))
 

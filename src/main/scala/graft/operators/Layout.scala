@@ -314,7 +314,7 @@ object Layout {
     * 1-per-shard: the classic distributed approximation of the LPT
     * (longest-processing-time-first) bin packing this repo's
     * [[graft.sources]] manifest scan applies driver-side to SPLITS
-    * (`sources/ManifestSourceV2.scala:122`, the largest-file-into-
+    * (`ManifestDataSource.packBins`, the largest-file-into-
     * lightest-bin greedy loop) — LPT's "currently lightest bin" needs
     * sequential state, so here it is replaced by the snake's "next in
     * alternating order", expressed as pure rank arithmetic so it runs as
@@ -387,7 +387,7 @@ object Layout {
     * doc rank → load-order shard index, so every consecutive N-sized size
     * band of new docs spreads one-per-shard starting at the lightest.
     * The shard count is read off the manifest (one metadata-sized driver
-    * action, the ManifestSource discipline). Deterministic given
+    * action, as the manifest sources parse theirs). Deterministic given
     * (manifest, batch).
     *
     * Returns (idCol, n_tokens, shard) for every new document.

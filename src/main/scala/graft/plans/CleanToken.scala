@@ -39,16 +39,24 @@ object CleanToken {
   def clean(s: UTF8String): UTF8String = {
     val bytes = s.getBytes
     val out   = new Array[Byte](bytes.length)
-    var n = 0
-    var i = 0
-    while (i < bytes.length) {
-      var b = bytes(i)
-      if (b >= 'A' && b <= 'Z') b = (b + 32).toByte
-      if (b >= 'a' && b <= 'z') { out(n) = b; n += 1 }
-      i += 1
-    }
     // no "unchanged" shortcut: n == length also holds when bytes were only
     // lowercased in place, and returning `s` would skip that change
-    UTF8String.fromBytes(out, 0, n)
+    UTF8String.fromBytes(out, 0, cleanInto(bytes, bytes.length, out))
+  }
+
+  /** The byte loop of [[clean]] over `src[0, len)`: writes the kept,
+    * lowercased bytes to `dst[0, n)` and returns n. `dst` may be `src`, as
+    * the write index never passes the read index.
+    */
+  def cleanInto(src: Array[Byte], len: Int, dst: Array[Byte]): Int = {
+    var n = 0
+    var i = 0
+    while (i < len) {
+      var b = src(i)
+      if (b >= 'A' && b <= 'Z') b = (b + 32).toByte
+      if (b >= 'a' && b <= 'z') { dst(n) = b; n += 1 }
+      i += 1
+    }
+    n
   }
 }

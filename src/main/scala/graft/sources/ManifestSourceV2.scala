@@ -4,14 +4,21 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.CleanToken
 
 /** DataSource V2 implementation of the reference's manifest-corpus format:
   *
@@ -25,13 +32,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * src/main.cpp:49-83) is parsed once at planning time (it is tiny — one
   * token per file, the same regime as Spark's own file listing); document
   * CONTENT is read distributed, one task per bin-packed group of files.
+  * The id travels WITH the partition — no path join, no URI decoding — and
+  * `SupportsPushDownRequiredColumns` prunes unread columns at the scan (a
+  * `select(line)` never materializes paths).
   *
-  * Compared to the `input_file_name()` + broadcast-join assembly in
-  * [[ManifestSource.docLines]], the id travels WITH the partition — no
-  * URI decoding, no join — and `SupportsPushDownRequiredColumns` prunes
-  * unread columns at the scan (a `select(line)` never materializes paths).
-  * Both assemblies are spec-asserted identical; this one is the
-  * sources-API-native form a catalog/table ecosystem would register.
+  * This is the line reader: one row per text line, for callers that tokenize
+  * with [[graft.operators.Tokenize]]. The index build reads the same
+  * manifest through [[ManifestPostingsDataSource]] instead, which tokenizes
+  * inside the scan.
   *
   * Size-greedy bin packing bounds task count: files are assigned to at most
   * `maxPartitions` (option, default 32) bins by descending size, largest
@@ -82,6 +90,25 @@ object ManifestDataSource {
       }
     } finally tokens.close()
   }
+
+  /** LPT greedy packing: files by descending size, each into the currently
+    * lightest of `min(maxBins, #files)` bins; empty bins are dropped.
+    */
+  def packBins(files: Seq[(Long, String)], maxBins: Int): Seq[Vector[(Long, String)]] = {
+    if (files.isEmpty) return Seq.empty
+    val nBins = math.max(1, math.min(maxBins, files.size))
+    val bins  = Array.fill(nBins)(Vector.empty[(Long, String)])
+    val loads = Array.fill(nBins)(0L)
+    files
+      .map { case (id, p) => (id, p, new java.io.File(p).length()) }
+      .sortBy(-_._3)
+      .foreach { case (id, p, sz) =>
+        val i = loads.indexOf(loads.min)
+        bins(i) :+= ((id, p))
+        loads(i) += math.max(sz, 1L)
+      }
+    bins.filter(_.nonEmpty).toSeq
+  }
 }
 
 class ManifestTable(manifestPath: String, maxPartitions: Int, baseDir: Option[String]) extends Table with SupportsRead {
@@ -117,20 +144,7 @@ class ManifestScan(manifestPath: String, maxPartitions: Int, baseDir: Option[Str
 
   override def planInputPartitions(): Array[InputPartition] = {
     val files = ManifestDataSource.parseManifest(manifestPath, baseDir)
-    if (files.isEmpty) return Array.empty
-    val nBins = math.max(1, math.min(maxPartitions, files.size))
-    // LPT greedy: largest file into the currently-lightest bin
-    val bins  = Array.fill(nBins)(Vector.empty[(Long, String)])
-    val loads = Array.fill(nBins)(0L)
-    files
-      .map { case (id, p) => (id, p, new java.io.File(p).length()) }
-      .sortBy(-_._3)
-      .foreach { case (id, p, sz) =>
-        val i = loads.indexOf(loads.min)
-        bins(i) :+= ((id, p))
-        loads(i) += math.max(sz, 1L)
-      }
-    bins.filter(_.nonEmpty).map(ManifestInputPartition(_): InputPartition)
+    ManifestDataSource.packBins(files, maxPartitions).map(ManifestInputPartition(_): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -184,4 +198,221 @@ class ManifestPartitionReader(files: Seq[(Long, String)], required: StructType)
   override def get(): InternalRow = current
 
   override def close(): Unit = if (reader != null) { reader.close(); reader = null }
+}
+
+/** DataSource V2 postings scan over the same manifest format — the
+  * reference mapper (src/main.cpp:89-146,188-191) inside the scan:
+  *
+  * {{{
+  *   spark.read.format("graft-manifest-postings").load("/path/to/manifest.txt")
+  *   // => (word STRING, doc_ids ARRAY<BIGINT>): partial postings
+  * }}}
+  *
+  * Planning reuses [[ManifestDataSource.parseManifest]] and the LPT
+  * packing into `min(#files, defaultParallelism)` bins, one per core: each
+  * bin emits one row per distinct word it saw, so fewer bins means fewer
+  * rows to merge. Each reader tokenizes its bin's files with a byte loop
+  * ([[ManifestPostingsReader]]) and emits `(word, ascending doc_ids)` rows.
+  * A document's id lands in exactly one row per word, so the id sets of
+  * one word are disjoint across rows and
+  * [[graft.operators.InvertedIndex.mergePartials]] finishes the index with
+  * one shuffle and a sort of the concatenated lists — no token row ever
+  * leaves the scan.
+  *
+  * The scan reports `files`, `bytes`, `tokens` (non-empty cleaned tokens)
+  * and `partial_rows` as custom metrics of its plan node.
+  */
+class ManifestPostingsDataSource extends TableProvider with DataSourceRegister {
+  override def shortName(): String = "graft-manifest-postings"
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    ManifestPostingsDataSource.Schema
+
+  override def getTable(
+      schema: StructType,
+      partitioning: Array[Transform],
+      properties: util.Map[String, String]): Table = {
+    val path = Option(properties.get("path")).getOrElse(
+      throw new IllegalArgumentException("graft-manifest-postings requires a manifest path (.load(path))"))
+    new ManifestPostingsTable(path, Option(properties.get("baseDir")))
+  }
+}
+
+object ManifestPostingsDataSource {
+  val Schema: StructType = StructType(Seq(
+    StructField("word", StringType, nullable = false),
+    StructField("doc_ids", ArrayType(LongType, containsNull = false), nullable = false)))
+}
+
+class ManifestPostingsTable(manifestPath: String, baseDir: Option[String]) extends Table with SupportsRead {
+  override def name(): String = s"graft-manifest-postings(`$manifestPath`)"
+  override def schema(): StructType = ManifestPostingsDataSource.Schema
+  override def capabilities(): util.Set[TableCapability] =
+    Set(TableCapability.BATCH_READ).asJava
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    () => new ManifestPostingsScan(manifestPath, baseDir)
+}
+
+class ManifestPostingsScan(manifestPath: String, baseDir: Option[String]) extends Scan with Batch {
+
+  override def readSchema(): StructType = ManifestPostingsDataSource.Schema
+  override def toBatch: Batch = this
+  override def description(): String = s"graft-manifest-postings $manifestPath"
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val files = ManifestDataSource.parseManifest(manifestPath, baseDir)
+    val cores = SparkSession.active.sparkContext.defaultParallelism
+    ManifestDataSource.packBins(files, cores).map(ManifestInputPartition(_): InputPartition).toArray
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory = ManifestPostingsReaderFactory
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new ManifestFilesMetric, new ManifestBytesMetric, new ManifestTokensMetric, new ManifestPartialRowsMetric)
+}
+
+object ManifestPostingsReaderFactory extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new ManifestPostingsReader(partition.asInstanceOf[ManifestInputPartition].files)
+}
+
+// Spark instantiates a scan's metrics by class name on the driver, so each
+// needs its own class with a no-argument constructor.
+abstract class ManifestScanMetric(override val name: String, override val description: String)
+  extends CustomSumMetric
+class ManifestFilesMetric extends ManifestScanMetric("files", "manifest files read")
+class ManifestBytesMetric extends ManifestScanMetric("bytes", "document bytes read")
+class ManifestTokensMetric extends ManifestScanMetric("tokens", "non-empty cleaned tokens")
+class ManifestPartialRowsMetric extends ManifestScanMetric("partial_rows", "partial postings rows emitted")
+
+/** The reference mapper over one bin of manifest files.
+  *
+  * Files are read in ascending id order, in 64 KiB chunks. Tokens split on
+  * the six ASCII whitespace bytes (the set Java's `\s` and C's `isspace`
+  * share; every other byte, NUL and invalid UTF-8 included, is token
+  * content) and are cleaned by [[graft.plans.CleanToken.cleanInto]], the
+  * byte loop of the line path's tokenizer. Each non-empty word maps to a
+  * primitive id buffer, and a file's id is appended once per word, so the
+  * buffers stay ascending and distinct with no sort.
+  *
+  * Rows are emitted when the bin is done, or earlier, at a file boundary,
+  * once the buffers hold `flushIds` ids: task memory stays bounded at any
+  * scale, and a file's ids never split across two rows of one word.
+  */
+class ManifestPostingsReader(files: Seq[(Long, String)], flushIds: Long = ManifestPostingsReader.FlushIds)
+  extends PartitionReader[InternalRow] {
+
+  private val pending = files.sortBy(_._1).iterator
+  private var postings = new util.HashMap[UTF8String, ManifestPostingsReader.IdBuffer]()
+  private var held = 0L
+  private var out: util.Iterator[util.Map.Entry[UTF8String, ManifestPostingsReader.IdBuffer]] =
+    util.Collections.emptyIterator()
+  private var current: InternalRow = _
+  private val chunk = new Array[Byte](1 << 16)
+  private var token = new Array[Byte](64)
+  private var nFiles, nBytes, nTokens, nRows = 0L
+
+  override def next(): Boolean = {
+    while (!out.hasNext) {
+      if (pending.hasNext) {
+        val (id, path) = pending.next()
+        read(id, path)
+        if (held >= flushIds) flush()
+      } else if (held > 0) flush()
+      else return false
+    }
+    val e = out.next()
+    current = new GenericInternalRow(Array[Any](e.getKey, e.getValue.toArrayData))
+    nRows += 1
+    true
+  }
+
+  /** Hands the buffers over to `out` and starts empty ones. */
+  private def flush(): Unit = {
+    out = postings.entrySet().iterator()
+    postings = new util.HashMap[UTF8String, ManifestPostingsReader.IdBuffer]()
+    held = 0
+  }
+
+  private def read(id: Long, path: String): Unit = {
+    val in = new java.io.FileInputStream(path)
+    try {
+      var len = 0
+      var r = in.read(chunk)
+      while (r >= 0) {
+        nBytes += r
+        var i = 0
+        while (i < r) {
+          val b = chunk(i)
+          if (b == ' ' || (b >= '\t' && b <= '\r')) {
+            if (len > 0) { add(id, len); len = 0 }
+          } else {
+            if (len == token.length) token = util.Arrays.copyOf(token, len * 2)
+            token(len) = b
+            len += 1
+          }
+          i += 1
+        }
+        r = in.read(chunk)
+      }
+      if (len > 0) add(id, len)
+    } finally in.close()
+    nFiles += 1
+  }
+
+  /** Cleans `token[0, rawLen)` in place and records `id` for the word. */
+  private def add(id: Long, rawLen: Int): Unit = {
+    val n = CleanToken.cleanInto(token, rawLen, token)
+    if (n > 0) {
+      nTokens += 1
+      val probe = UTF8String.fromAddress(token, Platform.BYTE_ARRAY_OFFSET, n)
+      var ids = postings.get(probe)
+      if (ids == null) {
+        ids = new ManifestPostingsReader.IdBuffer
+        postings.put(probe.copy(), ids)
+      }
+      if (ids.add(id)) held += 1
+    }
+  }
+
+  override def get(): InternalRow = current
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    ManifestPostingsReader.metric("files", nFiles),
+    ManifestPostingsReader.metric("bytes", nBytes),
+    ManifestPostingsReader.metric("tokens", nTokens),
+    ManifestPostingsReader.metric("partial_rows", nRows))
+
+  override def close(): Unit = ()
+}
+
+object ManifestPostingsReader {
+
+  /** Ids a reader holds before it flushes at the next file boundary:
+    * 1 Mi ids, 8 MiB of id buffers plus at most as many words.
+    */
+  val FlushIds: Long = 1L << 20
+
+  /** Ascending distinct ids of one word: appends skip a repeat of the last id. */
+  final class IdBuffer {
+    private var ids = new Array[Long](2)
+    private var n = 0
+
+    def add(id: Long): Boolean =
+      if (n > 0 && ids(n - 1) == id) false
+      else {
+        if (n == ids.length) ids = util.Arrays.copyOf(ids, n * 2)
+        ids(n) = id
+        n += 1
+        true
+      }
+
+    def toArrayData: ArrayData = UnsafeArrayData.fromPrimitiveArray(ids, Platform.LONG_ARRAY_OFFSET, n, 8)
+  }
+
+  private def metric(metricName: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = metricName
+    override def value(): Long = v
+  }
 }

@@ -16,7 +16,8 @@ import graft.sources.LetterSink
 /** The exact sink must rank and write the 26 letter files byte-for-byte like
   * the reference, on every host: a hand-built corpus under
   * `src/test/resources/ranking` is checked against a plain-Scala model of
-  * the reference, for the exact and the distributed sink alike, and the
+  * the reference, for the exact and the distributed sink alike, and so is
+  * the byte-adversarial corpus under `src/test/resources/bytes`; the
   * exact sink's job shape is pinned. The distributed sink
   * must produce a letter-partitioned layout that supports partition pruning
   * on read — the at-scale path where exact filenames stop mattering and
@@ -160,15 +161,18 @@ class LetterSinkSpec extends SparkSpec {
   }
 
   private val rankingDir = Paths.get(getClass.getResource("/ranking/manifest.txt").toURI).getParent
+  private val bytesDir = Paths.get(getClass.getResource("/bytes/manifest.txt").toURI).getParent
 
-  /** The corpus documents with the manifest's positional 1-based ids. */
-  private lazy val rankingDocs: Seq[(Long, String)] = {
-    val manifest = new String(Files.readAllBytes(rankingDir.resolve("manifest.txt")), UTF_8)
+  /** A corpus's documents with the manifest's positional 1-based ids. */
+  private def corpusDocs(dir: java.nio.file.Path): Seq[(Long, String)] = {
+    val manifest = new String(Files.readAllBytes(dir.resolve("manifest.txt")), UTF_8)
       .split("\\s+").filter(_.nonEmpty)
     manifest.slice(1, 1 + manifest(0).toInt).toSeq.zipWithIndex.map { case (f, i) =>
-      (i + 1L) -> new String(Files.readAllBytes(rankingDir.resolve(f)), UTF_8)
+      (i + 1L) -> new String(Files.readAllBytes(dir.resolve(f)), UTF_8)
     }
   }
+
+  private lazy val rankingDocs: Seq[(Long, String)] = corpusDocs(rankingDir)
 
   private lazy val deltaDocs: Seq[(Long, String)] =
     new String(Files.readAllBytes(rankingDir.resolve("delta.tsv")), UTF_8)
@@ -234,6 +238,20 @@ class LetterSinkSpec extends SparkSpec {
     val part = Files.createTempDirectory("graft-rank-merged-part").toString
     LetterSink.mergePartitioned(spark, base, deltaPostings, part)
     assertParts(part, want)
+  }
+
+  test("writeExact and mergeExact == the plain-Scala model on the byte-adversarial corpus") {
+    val docs = corpusDocs(bytesDir)
+    val postings = Engine.indexFromManifest(spark, bytesDir.resolve("manifest.txt").toString, bytesDir.toString)
+    val want = Model.files(Model.postings(docs))
+    // invalid UTF-8 and NUL bytes vanish, the file listed twice posts both ids
+    assert(want('o') == "omega:[6]\nop:[3]\n")
+    assert(want('i').startsWith("iota:[2 7]\n"))
+    val out = Files.createTempDirectory("graft-bytes-golden").toString
+    assertFiles(out, LetterSink.writeExact(postings, out), want)
+    val merged = Model.files(Model.merge(Model.postings(docs), Model.postings(deltaDocs)))
+    val mergedOut = Files.createTempDirectory("graft-bytes-merged").toString
+    assertFiles(mergedOut, LetterSink.mergeExact(spark, out, deltaPostings, mergedOut), merged)
   }
 
   test("writeExact ranks words in Spark's binary UTF-8 order and drops letters outside a-z") {

@@ -2,11 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.ManifestSource
+import graft.sources.ManifestDataSource
 
 /** Manifest parsing must match the reference's fscanf("%s") semantics:
   * blank lines don't consume ids, exactly N declared paths are read, and
-  * file paths with URI-special characters survive the corpus join.
+  * file paths with URI-special characters survive the corpus read.
   */
 class ManifestSpec extends SparkSpec {
 
@@ -18,12 +18,10 @@ class ManifestSpec extends SparkSpec {
     val manifest = dir.resolve("m.txt")
     // count and first path share a line; blank lines; junk after the 3rd path
     Files.writeString(manifest, "3 f1.txt\n\nf2.txt\n\n\nf3.txt\nTRAILING_JUNK_NOT_A_DOC\n")
-    val refs = ManifestSource
-      .docRefs(spark, manifest.toString, dir.toString)
-      .orderBy("file_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    assert(refs.toSeq == Seq((1L, "f1.txt"), (2L, "f2.txt"), (3L, "f3.txt")))
+    val refs = ManifestDataSource.parseManifest(manifest.toString, Some(dir.toString))
+    assert(refs == Seq((1L, s"$dir/f1.txt"), (2L, s"$dir/f2.txt"), (3L, s"$dir/f3.txt")))
+    // paths resolve against the manifest's own directory by default
+    assert(ManifestDataSource.parseManifest(manifest.toString) == refs)
   }
 
   test("paths with URI-special characters (+, %) survive the corpus join") {

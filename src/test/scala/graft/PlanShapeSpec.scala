@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{InvertedIndex, Search, Tokenize}
@@ -8,7 +10,7 @@ import graft.operators.{InvertedIndex, Search, Tokenize}
   * the thing that decides whether a pipeline survives a 100x scale-up, so a
   * regression that slips in an extra exchange should fail loudly here.
   */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Count SHUFFLE exchanges only — BroadcastExchange moves a small table to
     * every executor once and is exactly what we want joins to do.
@@ -22,6 +24,26 @@ class PlanShapeSpec extends SparkSpec {
     val postings = Engine.indexFromTable(docs)
     assert(exchanges(postings) == 1,
       s"postings should shuffle once:\n${postings.queryExecution.executedPlan}")
+  }
+
+  test("manifest index build: one exchange, no Generate, min(#files, defaultParallelism) scan partitions") {
+    val dir = java.nio.file.Paths.get(getClass.getResource("/bytes/manifest.txt").toURI).getParent
+    def build(manifest: java.nio.file.Path) = Engine.indexFromManifest(spark, manifest.toString, dir.toString)
+    def scanPartitions(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b.inputPartitions.size }
+    val two = java.nio.file.Files.createTempFile("graft-two-files", ".txt")
+    java.nio.file.Files.writeString(two, "2\nrows.txt\nseps.txt\n")
+    // the byte corpus lists 8 files; the scan packs one bin per core
+    for ((manifest, cores, bins) <- Seq((dir.resolve("manifest.txt"), 1, 1), (dir.resolve("manifest.txt"), 4, 4),
+        (two, 4, 2))) {
+      org.apache.spark.TestParallelism.withDefaultParallelism(spark.sparkContext, cores) {
+        val idx = build(manifest)
+        val plan = idx.queryExecution.executedPlan.toString
+        assert(exchanges(idx) == 1, s"the merge of partial postings shuffles once:\n$plan")
+        assert(!plan.contains("Generate"), s"no token rows are exploded:\n$plan")
+        assert(scanPartitions(idx) == Seq(bins), s"$manifest at $cores cores:\n$plan")
+      }
+    }
   }
 
   test("ranked-within-letters index = exactly two shuffles (agg + letter repartition)") {

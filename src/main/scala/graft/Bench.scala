@@ -154,9 +154,9 @@ object Bench {
           def fm(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
           println(s"""{"query":"$name","min":${fm(ss.min)},"samples":[${ss.map(fm).mkString(",")}]}""")
         } else
-        SparkEntry.queries.get(name) match {
+        SparkEntry.registry.find(_.name == name) match {
           case None => println(s"""{"query":"$name","err":"unknown"}""")
-          case Some(fn) =>
+          case Some(QueryDef(_, fn, _, _)) =>
             // a sample that throws must NOT adjudicate as a fast min: a
             // query broken on every run times the throw path (near zero)
             // and would silently adjudicate a regression flag as a huge
@@ -240,7 +240,7 @@ object Bench {
               spark.read.parquet(s"$sfDir/documents.parquet"), "text", Seq("doc_id")))))
     }
 
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.registry.sortBy(_.name).foreach { case QueryDef(name, fn, _, _) =>
       clearRddStorage()
       // build + execute inside the timer both times: several queries (the
       // dedup-groups family) run their iterative actions during DataFrame

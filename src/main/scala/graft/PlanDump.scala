@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * the optimization rounds commit under plans/r{N}/.
   *
   * Usage: `runMain graft.PlanDump <outDir> <tag> <sfDir> q_a q_b ...`
+  * (an unknown query name fails before Spark starts)
   *
   * Same session as Bench ([[GraftSession]] on `GraftSession.cpus` cores)
   * so the dumped initial plan is the one the bench runs.
@@ -19,25 +20,20 @@ object PlanDump {
     val outDir = args(0)
     val tag    = args(1)
     val sfDir  = args(2)
-    val names  = args.drop(3)
+    val defs   = SparkEntry.lookup(args.drop(3).toIndexedSeq: _*)
     val cpus   = GraftSession.cpus
     val spark  = GraftSession(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[plandump] unknown query: $name")
-        case Some(fn) =>
-          try {
-            val df = fn(spark, sfDir)
-            val txt = df.queryExecution.explainString(FormattedMode)
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"),
-              (s"== $name ($tag, sf=$sfDir) ==\n" + txt).getBytes("UTF-8"))
-            println(s"[plandump] wrote $outDir/${name}_$tag.txt")
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-          }
+    defs.foreach { case QueryDef(name, build, _, _) =>
+      try {
+        val txt = build(spark, sfDir).queryExecution.explainString(FormattedMode)
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"),
+          (s"== $name ($tag, sf=$sfDir) ==\n" + txt).getBytes("UTF-8"))
+        println(s"[plandump] wrote $outDir/${name}_$tag.txt")
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
     }
     spark.stop()

@@ -1,22 +1,27 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd+ args: restrict to the named queries (local iteration);
-    // the driver's two-arg invocation dumps everything
+    // the driver's two-arg invocation dumps everything. An unknown name
+    // fails before Spark starts: a typo must not read as an empty, green run.
     val Array(sfDir, outDir) = args.take(2)
-    val only: Set[String] = args.drop(2).toSet
+    val defs =
+      try if (args.length > 2) SparkEntry.lookup(args.drop(2).toIndexedSeq: _*) else SparkEntry.registry
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[verify] ${e.getMessage}")
+        sys.exit(2)
+      }
     val cpus = GraftSession.cpus
     // extensions on the correctness path too: the sorted_set_agg rewrite
     // then runs under every oracle compare, not just its own spec
     val spark = GraftSession(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    defs.foreach { d =>
+      val name = d.name
+      try d.build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -46,9 +51,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // registry order, so two runs write files that diff cleanly
+    val json = defs.map(d => s"${q(d.name)}: ${q(d.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -87,7 +87,7 @@ class StreamingSpec extends SparkSpec {
       val rescaled = sum * math.pow(2.0, -((tMax - last).toDouble / hl))
       (k, (n, math.floor(rescaled * 1e4 + 0.5) / 1e4))
     }
-    val want = SparkEntry.queries("q_decayed_counts")(spark, dir)
+    val want = SparkEntry.lookup("q_decayed_counts").head.build(spark, dir)
       .collect()
       .map(r => (r.getString(0), (r.getLong(1), r.getDouble(2))))
       .toMap
@@ -107,7 +107,7 @@ class StreamingSpec extends SparkSpec {
       .toMap
 
     val want = SparkEntry
-      .queries("q_sessions")(spark, dir)
+      .lookup("q_sessions").head.build(spark, dir)
       .select(col("user_id"), col("n_sessions"))
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))

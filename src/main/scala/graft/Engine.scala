@@ -9,11 +9,13 @@ import graft.sources.LetterSink
   * (manifest → tokenize → group → rank → 26 letter files) as one declarative
   * Spark plan. The reference's mappers become the scan: each task tokenizes
   * its bin of files and emits one partial postings row per distinct word.
-  * The reference's first pthread barrier becomes the one shuffle exchange
-  * (word hash-partitioning for the merge of those rows); its second, before
-  * the per-letter rank, becomes the collect to the driver, where
-  * [[graft.sources.LetterSink.writeExact]] ranks each letter's rows and
-  * writes the files in order, as the reference does — see SURVEY §3.
+  * The reference's first pthread barrier needs no exchange of its own: the
+  * scan already groups each bin's ids by word. Its second barrier, after
+  * which each reducer owns whole letters, becomes the one exchange, by
+  * first letter: each reduce task merges its words' lists, ranks its
+  * letters and formats their files
+  * ([[graft.sources.LetterSink.writeExact]]), and the driver writes them —
+  * see SURVEY §3.
   */
 object Engine {
 
@@ -26,14 +28,21 @@ object Engine {
     * [[Tokenize.tokens]] + [[InvertedIndex.postings]]) gives the same rows.
     */
   def indexFromManifest(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame =
-    InvertedIndex.mergePartials(spark.read
+    InvertedIndex.mergePartials(partials(spark, manifestPath, baseDir))
+
+  /** Full golden-parity run: write `a.txt`…`z.txt` under `outDir`. The
+    * scan's partial rows go to the sink as they are: its reducers merge
+    * each word's lists, so the build plans no word aggregate.
+    */
+  def buildIndex(spark: SparkSession, manifestPath: String, baseDir: String, outDir: String): Seq[String] =
+    LetterSink.writeExact(partials(spark, manifestPath, baseDir), outDir)
+
+  /** The scan's rows: one `(word, doc_ids)` per distinct word of each bin. */
+  private def partials(spark: SparkSession, manifestPath: String, baseDir: String): DataFrame =
+    spark.read
       .format("graft-manifest-postings")
       .option("baseDir", baseDir)
-      .load(manifestPath))
-
-  /** Full golden-parity run: write `a.txt`…`z.txt` under `outDir`. */
-  def buildIndex(spark: SparkSession, manifestPath: String, baseDir: String, outDir: String): Seq[String] =
-    LetterSink.writeExact(indexFromManifest(spark, manifestPath, baseDir), outDir)
+      .load(manifestPath)
 
   /** Build postings from any table with a text column — the parquet-era
     * equivalent of the manifest pipeline (documents table, web-crawl shards,

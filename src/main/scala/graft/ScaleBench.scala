@@ -1079,17 +1079,19 @@ object ScaleBench {
       // task 8): the reference corpus's 355 files each listed f times —
       // every replica is a distinct document (positional ids), so postings
       // lists grow ×f at constant vocabulary. Times the two sinks over the
-      // SAME materialized postings: writeExact collects the index unsorted
-      // and ranks each letter on the driver, so its cost is index-sized
-      // (vocab × postings — grows ×f here) and single-threaded;
-      // writePartitioned ranks inside its 26-way partitioned text write.
-      // The line is what turns LetterSink's "bounded collect" comment into
-      // a measured curve; if exact_sec bends superlinearly, prefer the
-      // partitioned sink at scale.
+      // SAME materialized postings: writeExact shuffles the rows once by
+      // first letter, each of its reduce tasks merges, ranks and formats
+      // the letters it owns, and the driver collects the 26 files' bytes
+      // and writes them, so its cost is index-sized (vocab × postings —
+      // grows ×f here) and at most as parallel as the letters hash into
+      // tasks; writePartitioned ranks inside its 26-way partitioned text
+      // write. If exact_sec bends superlinearly, prefer the partitioned
+      // sink at scale.
       val baseDir = "/root/reference/checker"
-      if (want("index_build") && !new java.io.File(s"$baseDir/test.txt").exists())
+      if (want("index_build") && !new java.io.File(s"$baseDir/test.txt").exists()) {
         Console.err.println(s"WARN: $baseDir/test.txt missing: skipped index_build (factor $f)")
-      else if (want("index_build")) {
+        println(s"""{"pipeline":"index_build","factor":$f,"skipped":"$baseDir/test.txt missing"}""")
+      } else if (want("index_build")) {
       val names = java.nio.file.Files
         .readAllLines(java.nio.file.Paths.get(s"$baseDir/test.txt"))
         .toArray(Array.empty[String]).toSeq.drop(1)

@@ -21,8 +21,8 @@ object InvertedIndex {
     * Duplicate (word, doc_id) pairs collapse (reference src/main.cpp:188-191).
     *
     * This is the line path's aggregate: one input row per token occurrence.
-    * The manifest build ([[graft.Engine.indexFromManifest]]) dedups inside
-    * its scan and finishes with [[mergePartials]] instead; this form serves
+    * The manifest postings ([[graft.Engine.indexFromManifest]]) dedup inside
+    * their scan and finish with [[mergePartials]] instead; this form serves
     * table inputs and is the reference the manifest build is tested against.
     */
   def postings(tokens: DataFrame, idCol: String = "doc_id"): DataFrame =
@@ -34,6 +34,12 @@ object InvertedIndex {
     * The id lists of one word must be disjoint across rows, as the
     * `graft-manifest-postings` scan emits them, so the per-word merge is a
     * sort of the concatenated lists with no dedup.
+    *
+    * [[graft.Engine.indexFromManifest]] calls it, for callers that want the
+    * manifest's postings as a DataFrame (Bench, ScaleBench, deltas to
+    * merge). The letter-file build ([[graft.Engine.buildIndex]]) does not:
+    * it hands the scan's rows to [[graft.sources.LetterSink.writeExact]],
+    * whose reducers merge each word's lists themselves.
     */
   def mergePartials(partials: DataFrame): DataFrame =
     withDfAndLetter(partials

@@ -1,10 +1,14 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Partitioned text sink matching the reference byte-for-byte (O11,
@@ -14,12 +18,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * buckets still emit an (empty) file.
   *
   * Two variants:
-  *  - `writeExact`: driver-side rank and write of the 26 buckets — mirrors
-  *    the reference, which ranks each bucket in memory and then writes the
-  *    files one after another (src/main.cpp:225-236, README.md:125-133), and
-  *    produces the exact filenames the golden checker diffs. The collect is
-  *    bounded by the index size (postings), not the corpus size; the heavy
-  *    lifting (tokenize/group) stays distributed.
+  *  - `writeExact`: the reference's reduce phase (src/main.cpp:172-236).
+  *    It takes rows of `(word, doc_ids)` whose lists are each ascending;
+  *    one word may span several rows, and its line carries the sorted
+  *    distinct union of its lists, so a build feeds the scan's per-bin
+  *    partial rows and a merge feeds the old snapshot's rows next to the
+  *    delta's. The rows shuffle once by first letter, each reduce task owns
+  *    whole letters and merges, ranks and formats them, and the driver
+  *    writes the 26 returned files under their exact golden names.
   *  - `writePartitioned`: fully distributed `partitionBy("letter")` text write
   *    for at-scale use, where exact filenames don't matter but parallel IO does.
   */
@@ -32,51 +38,146 @@ object LetterSink {
       col("word"),
       concat(col("word"), lit(":["), array_join(col("doc_ids"), " "), lit("]")).as("line"))
 
-  /** One collected line and its rank key within its letter. */
-  private final case class Ranked(df: Int, word: UTF8String, line: String)
-
-  /** df DESC (a null df last), then word ASC in Spark's binary UTF-8 order:
-    * the order `orderBy(desc("df"), asc("word"))` gives.
-    */
-  private val byRank: Ordering[Ranked] = (x, y) =>
-    if (x.df != y.df) Integer.compare(y.df, x.df) else x.word.binaryCompare(y.word)
-
-  /** Driver-side exact sink: returns the 26 output paths.
+  /** Exact sink: returns the 26 output paths.
     *
-    * One job: the formatted rows are collected unsorted straight off the
-    * aggregate, then each letter's rows are ranked on the driver. A global
-    * `orderBy` would add a sampling job and a range exchange, each of which
-    * recomputes the final aggregate, plus a sort stage. Rows whose letter is
-    * outside a-z are dropped; an empty letter still gets an (empty) file,
-    * as x.txt is empty in the golden output.
+    * One letter exchange into `defaultParallelism` partitions (the count the
+    * scan bins by; given explicitly, so AQE cannot fold the small exchange
+    * into one task), then one job whose tasks each return the bytes of the
+    * letter files they own. Rows whose word does not start with a-z are
+    * dropped; an empty letter still gets an (empty) file, as x.txt is empty
+    * in the golden output.
     */
   def writeExact(postings: DataFrame, outDir: String): Seq[String] = {
     val out = Paths.get(outDir)
     Files.createDirectories(out)
-    val buckets = Array.fill(26)(Array.newBuilder[Ranked])
-    formatted(postings).collect().foreach { r =>
-      val letter = r.getString(0)
-      if (letter != null && letter.length == 1 && letter(0) >= 'a' && letter(0) <= 'z')
-        buckets(letter(0) - 'a') += Ranked(
-          if (r.isNullAt(1)) Int.MinValue else r.getInt(1), UTF8String.fromString(r.getString(2)), r.getString(3))
+    val byLetter = postings
+      .select(col("word"), col("doc_ids").cast(ArrayType(LongType)))
+      .repartition(postings.sparkSession.sparkContext.defaultParallelism, substring(col("word"), 1, 1))
+    val qe = byLetter.queryExecution
+    val files = SQLExecution.withNewExecutionId(qe, Some("LetterSink.writeExact")) {
+      qe.toRdd.mapPartitions(reduceLetters).collect()
     }
+    val bodies = Array.fill(26)(Array.emptyByteArray)
+    files.foreach { case (letter, body) => bodies(letter) = body }
     ('a' to 'z').map { ch =>
       val p = out.resolve(s"$ch.txt")
-      val body = buckets(ch - 'a').result().sorted(byRank).iterator.map(_.line + "\n").mkString
-      Files.write(p, body.getBytes(StandardCharsets.UTF_8))
+      Files.write(p, bodies(ch - 'a'))
       p.toString
     }
   }
 
+  /** One word's ids: its first list as it came, later lists appended. */
+  private final class Entry(val word: UTF8String, var ids: Array[Long]) {
+    var df: Int = ids.length
+    var merged = false
+
+    def add(more: Array[Long]): Unit = {
+      if (df + more.length > ids.length) ids = util.Arrays.copyOf(ids, math.max(df + more.length, 2 * ids.length))
+      System.arraycopy(more, 0, ids, df, more.length)
+      df += more.length
+      merged = true
+    }
+
+    /** The sorted distinct union of the lists added. */
+    def union(): Unit = if (merged) {
+      util.Arrays.sort(ids, 0, df)
+      var n = 0
+      var i = 0
+      while (i < df) {
+        if (n == 0 || ids(n - 1) != ids(i)) { ids(n) = ids(i); n += 1 }
+        i += 1
+      }
+      df = n
+    }
+  }
+
+  /** df DESC, then word ASC in Spark's binary UTF-8 order. */
+  private val byRank: util.Comparator[Entry] = (x, y) =>
+    if (x.df != y.df) Integer.compare(y.df, x.df) else x.word.binaryCompare(y.word)
+
+  /** One reduce task: merges the lists of each word it receives, then ranks
+    * and formats each of its letters. Returns (letter - 'a', file bytes) for
+    * every non-empty letter. Shuffle rows are reused buffers, so the word
+    * and the ids are copied.
+    */
+  private def reduceLetters(rows: Iterator[InternalRow]): Iterator[(Int, Array[Byte])] = {
+    val words = new util.HashMap[UTF8String, Entry]()
+    rows.foreach { r =>
+      if (!r.isNullAt(0)) {
+        val word = r.getUTF8String(0)
+        if (word.numBytes > 0 && word.getByte(0) >= 'a' && word.getByte(0) <= 'z') {
+          val ids = if (r.isNullAt(1)) Array.emptyLongArray else r.getArray(1).toLongArray()
+          val e = words.get(word)
+          if (e == null) { val w = word.copy(); words.put(w, new Entry(w, ids)) }
+          else e.add(ids)
+        }
+      }
+    }
+    val letters = Array.fill(26)(new util.ArrayList[Entry]())
+    words.values.forEach { e => e.union(); letters(e.word.getByte(0) - 'a').add(e) }
+    (0 until 26).iterator.filter(!letters(_).isEmpty).map { l =>
+      letters(l).sort(byRank)
+      val out = new LineBuffer
+      letters(l).forEach(out.line)
+      l -> out.bytes
+    }
+  }
+
+  /** Growable bytes of one letter file. */
+  private final class LineBuffer {
+    private var buf = new Array[Byte](1 << 12)
+    private var len = 0
+
+    private def ensure(k: Int): Unit =
+      if (len + k > buf.length) buf = util.Arrays.copyOf(buf, math.max(len + k, 2 * buf.length))
+
+    private def put(b: Byte): Unit = { ensure(1); buf(len) = b; len += 1 }
+
+    private def put(id: Long): Unit =
+      if (id < 0) java.lang.Long.toString(id).foreach(c => put(c.toByte))
+      else {
+        var digits = 1
+        var t = id / 10
+        while (t > 0) { digits += 1; t /= 10 }
+        ensure(digits)
+        var v = id
+        var i = len + digits - 1
+        while (i >= len) { buf(i) = ('0' + v % 10).toByte; v /= 10; i -= 1 }
+        len += digits
+      }
+
+    /** `word:[id id ...]` and a newline. */
+    def line(e: Entry): Unit = {
+      val n = e.word.numBytes
+      ensure(n)
+      e.word.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + len)
+      len += n
+      put(':'.toByte)
+      put('['.toByte)
+      var i = 0
+      while (i < e.df) {
+        if (i > 0) put(' '.toByte)
+        put(e.ids(i))
+        i += 1
+      }
+      put(']'.toByte)
+      put('\n'.toByte)
+    }
+
+    def bytes: Array[Byte] = util.Arrays.copyOf(buf, len)
+  }
+
   /** Incremental maintenance of an ON-DISK letter index: read the existing
-    * `a.txt`…`z.txt` snapshot back through the `graft-letters` DSv2 reader,
-    * array-union the delta's postings per word
-    * ([[graft.operators.InvertedIndex.mergeIndexes]]), and write the merged
-    * result to `outDir` as a NEW snapshot — the input dir is never touched
-    * (immutable-snapshot semantics: readers of the old index keep a
-    * consistent view while the merge runs, exactly how an at-scale index
-    * rolls versions). Completes the format's lifecycle: build → write →
-    * read → query → MAINTAIN, all in the reference's own file format.
+    * `a.txt`…`z.txt` snapshot back through the `graft-letters` DSv2 reader
+    * and hand its rows, next to the delta's `(word, doc_ids)`, to
+    * [[writeExact]], whose per-word union gives
+    * [[graft.operators.InvertedIndex.mergeIndexes]]' `array_union` without
+    * a join. The merged result goes to `outDir` as a NEW snapshot — the
+    * input dir is never touched (immutable-snapshot semantics: readers of
+    * the old index keep a consistent view while the merge runs, exactly how
+    * an at-scale index rolls versions). Completes the format's lifecycle:
+    * build → write → read → query → MAINTAIN, all in the reference's own
+    * file format.
     *
     * Returns the 26 output paths.
     */
@@ -87,7 +188,7 @@ object LetterSink {
       outDir: String): Seq[String] = {
     val existing = spark.read.format("graft-letters").load(indexDir)
       .select(col("word"), col("doc_ids"))
-    writeExact(graft.operators.InvertedIndex.mergeIndexes(existing, delta), outDir)
+    writeExact(existing.unionByName(delta.select(col("word"), col("doc_ids"))), outDir)
   }
 
   /** Distributed sink: dir-per-letter text write (`letter=a/part-*.txt`).

@@ -214,10 +214,12 @@ class ManifestPartitionReader(files: Seq[(Long, String)], required: StructType)
   * rows to merge. Each reader tokenizes its bin's files with a byte loop
   * ([[ManifestPostingsReader]]) and emits `(word, ascending doc_ids)` rows.
   * A document's id lands in exactly one row per word, so the id sets of
-  * one word are disjoint across rows and
-  * [[graft.operators.InvertedIndex.mergePartials]] finishes the index with
-  * one shuffle and a sort of the concatenated lists — no token row ever
-  * leaves the scan.
+  * one word are disjoint across rows, and one shuffle and a sort of the
+  * concatenated lists finish the index — no token row ever leaves the
+  * scan. The letter-file build shuffles the rows by first letter into
+  * [[graft.sources.LetterSink.writeExact]]'s reducers;
+  * [[graft.operators.InvertedIndex.mergePartials]] shuffles them by word
+  * into a postings DataFrame.
   *
   * The scan reports `files`, `bytes`, `tokens` (non-empty cleaned tokens)
   * and `partial_rows` as custom metrics of its plan node.

@@ -6,7 +6,9 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.TestParallelism.withDefaultParallelism
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 
@@ -18,10 +20,10 @@ import graft.sources.LetterSink
   * `src/test/resources/ranking` is checked against a plain-Scala model of
   * the reference, for the exact and the distributed sink alike, and so is
   * the byte-adversarial corpus under `src/test/resources/bytes`; the
-  * exact sink's job shape is pinned. The distributed sink
-  * must produce a letter-partitioned layout that supports partition pruning
-  * on read — the at-scale path where exact filenames stop mattering and
-  * parallel IO + pruning start mattering.
+  * exact sink's union of a word's rows and its job shape are pinned. The
+  * distributed sink must produce a letter-partitioned layout that supports
+  * partition pruning on read — the at-scale path where exact filenames stop
+  * mattering and parallel IO + pruning start mattering.
   */
 class LetterSinkSpec extends SparkSpec {
 
@@ -267,16 +269,63 @@ class LetterSinkSpec extends SparkSpec {
     assertFiles(out, LetterSink.writeExact(postings, out), want)
   }
 
+  test("buildIndex == the model at default parallelism 1 and 4, on both corpora") {
+    // the build feeds the scan's per-bin partial rows straight to the sink,
+    // so at 4 cores a word's ids arrive on up to 4 rows, and the reducers
+    // own letters however the 26 hash into the partitions
+    for (dir <- Seq(rankingDir, bytesDir); cores <- Seq(1, 4)) {
+      val want = Model.files(Model.postings(corpusDocs(dir)))
+      val out = Files.createTempDirectory(s"graft-build-$cores").toString
+      val paths = withDefaultParallelism(spark.sparkContext, cores) {
+        Engine.buildIndex(spark, dir.resolve("manifest.txt").toString, dir.toString, out)
+      }
+      assertFiles(out, paths, want)
+    }
+  }
+
+  test("writeExact unions a word's rows: disjoint, overlapping and empty lists") {
+    import spark.implicits._
+    val rows = Seq(
+      "ant" -> Seq(4L, 9L), "ant" -> Seq(1L, 7L), // disjoint
+      "bee" -> Seq(1L, 2L, 5L), "bee" -> Seq(2L, 5L, 8L), "bee" -> Seq(5L), // overlapping
+      "cat" -> Seq(3L), "cat" -> Seq.empty[Long], // one list empty
+      "cow" -> Seq(1L, 2L), "dog" -> Seq(6L))
+    val want = Model.files(rows.groupBy(_._1).view.mapValues(_.flatMap(_._2).toSet).toMap)
+    assert(want('a') == "ant:[1 4 7 9]\n")
+    assert(want('b') == "bee:[1 2 5 8]\n")
+    assert(want('c') == "cow:[1 2]\ncat:[3]\n")
+    val out = Files.createTempDirectory("graft-union").toString
+    // three input partitions, so one word's rows come from different tasks
+    assertFiles(out, LetterSink.writeExact(rows.toDF("word", "doc_ids").repartition(3), out), want)
+  }
+
+  test("mergeExact with a delta that re-ingests base doc ids == Model.merge") {
+    val base = Files.createTempDirectory("graft-reingest-base").toString
+    LetterSink.writeExact(rankingPostings, base)
+    // docs 1 and 3 again, unchanged, and doc 2 with a word of doc 4
+    val again = rankingDocs.filter(d => d._1 == 1L || d._1 == 3L) ++
+      rankingDocs.filter(_._1 == 2L).map { case (id, text) => id -> s"$text zoo" }
+    val want = Model.files(Model.merge(Model.postings(rankingDocs), Model.postings(again)))
+    assert(want('z') == "zoo:[2 4]\n")
+    assert(want('c') == "cow:[1 2 3]\ncab:[1]\ncafs:[2]\n")
+    val delta = {
+      import spark.implicits._
+      InvertedIndex.postings(Tokenize.tokens(again.toDF("doc_id", "text"), "text", Seq("doc_id")))
+    }
+    val out = Files.createTempDirectory("graft-reingest-merged").toString
+    assertFiles(out, LetterSink.mergeExact(spark, base, delta, out), want)
+  }
+
   /** The jobs Spark started for `body` and every physical plan it described
     * (each SQL execution's initial plan and each adaptive re-plan), seen by
     * a SparkListener.
     */
-  private def jobsAndPlans(body: => Unit): (Int, Seq[String]) = {
+  private def jobsAndPlans(body: => Unit): (Int, Seq[SparkPlanInfo]) = {
     val sc = spark.sparkContext
     val group = s"letter-sink-shape-${System.nanoTime()}"
     val marker = s"$group-marker"
     val jobs = new AtomicInteger
-    val plans = new ConcurrentLinkedQueue[String]
+    val plans = new ConcurrentLinkedQueue[SparkPlanInfo]
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -285,8 +334,8 @@ class LetterSinkSpec extends SparkSpec {
           else if (g == marker) drained.countDown()
         }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.sparkPlanInfo)
         case _ => ()
       }
     }
@@ -306,19 +355,37 @@ class LetterSinkSpec extends SparkSpec {
     (jobs.get, plans.asScala.toSeq)
   }
 
-  test("writeExact runs 2 jobs and mergeExact 3, with no range partitioning: the driver ranks") {
+  /** A plan's nodes, adaptive query stages included. */
+  private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+
+  test("exact sink shape: one letter exchange, no aggregate, no join, no range sort") {
     val base = Files.createTempDirectory("graft-shape-base").toString
-    val (writeJobs, writePlans) = jobsAndPlans(LetterSink.writeExact(rankingPostings, base))
+    val (buildJobs, buildPlans) = jobsAndPlans(
+      Engine.buildIndex(spark, rankingDir.resolve("manifest.txt").toString, rankingDir.toString, base))
     val out = Files.createTempDirectory("graft-shape-merged").toString
     val (mergeJobs, mergePlans) = jobsAndPlans(LetterSink.mergeExact(spark, base, deltaPostings, out))
-    for ((name, plans) <- Seq("writeExact" -> writePlans, "mergeExact" -> mergePlans)) {
+    def show(plans: Seq[SparkPlanInfo]) = plans.map(p => nodes(p).map(_.simpleString).mkString("\n")).mkString("\n\n")
+    for ((name, plans) <- Seq("buildIndex" -> buildPlans, "mergeExact" -> mergePlans)) {
       assert(plans.nonEmpty, s"$name: no plan was observed")
-      plans.foreach(p => assert(!p.toLowerCase.contains("rangepartitioning"), s"$name plan sorts globally:\n$p"))
+      assert(!plans.flatMap(nodes).exists(_.simpleString.toLowerCase.contains("rangepartitioning")),
+        s"$name sorts globally:\n${show(plans)}")
     }
-    // writeExact: the aggregate's shuffle map stage, then one collect;
-    // mergeExact: the shuffle map stages of the delta aggregate and of the
-    // index read (the join's other side), then one collect
-    assert(writeJobs == 2, s"writeExact jobs\n${writePlans.mkString("\n")}")
-    assert(mergeJobs == 3, s"mergeExact jobs\n${mergePlans.mkString("\n")}")
+    // the build: the scan's rows shuffle once, by first letter, and the
+    // reducers merge them; no word aggregate runs before or after
+    buildPlans.foreach { p =>
+      val exchanges = nodes(p).filter(_.nodeName == "Exchange").map(_.simpleString)
+      assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(substring(word"),
+        s"buildIndex: one exchange, on the first letter:\n${show(Seq(p))}")
+      assert(!nodes(p).exists(n => n.nodeName == "HashAggregate" || n.nodeName == "ObjectHashAggregate"),
+        s"buildIndex aggregates:\n${show(Seq(p))}")
+    }
+    // the merge: the snapshot's rows and the delta's meet in the reducers
+    val joins = Set("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+    assert(!mergePlans.flatMap(nodes).exists(n => joins(n.nodeName)), s"mergeExact joins:\n${show(mergePlans)}")
+    // buildIndex: the letter exchange's map stage, then the reduce job;
+    // mergeExact: the delta aggregate's map stage, the letter exchange's
+    // (over the snapshot scan and the delta), then the reduce job
+    assert(buildJobs == 2, s"buildIndex jobs\n${show(buildPlans)}")
+    assert(mergeJobs == 3, s"mergeExact jobs\n${show(mergePlans)}")
   }
 }

@@ -107,14 +107,23 @@ class ManifestPostingsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val idx = Engine.indexFromManifest(spark, none, dir.toString)
     assert(collect(idx.queryExecution.executedPlan) { case b: BatchScanExec => b.inputPartitions.size } == Seq(0))
     assert(idx.collect().isEmpty && linePostings(none).collect().isEmpty)
+    val out = Files.createTempDirectory("graft-postings-none")
+    assert(Engine.buildIndex(spark, none, dir.toString, out.toString).map(p => Files.size(Paths.get(p))) == Seq.fill(26)(0L))
   }
 
   test("a manifest entry whose file is missing fails the build") {
     val d = Files.createTempDirectory("graft-postings-missing")
     Files.writeString(d.resolve("a.txt"), "alpha\n")
     Files.writeString(d.resolve("m.txt"), "2\na.txt\nmissing.txt\n")
-    val e = intercept[Exception](Engine.indexFromManifest(spark, d.resolve("m.txt").toString, d.toString).collect())
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(_.isInstanceOf[java.io.FileNotFoundException]), e.toString)
+    val out = d.resolve("out")
+    for (build <- Seq(
+        () => Engine.indexFromManifest(spark, d.resolve("m.txt").toString, d.toString).collect(),
+        () => Engine.buildIndex(spark, d.resolve("m.txt").toString, d.toString, out.toString))) {
+      val e = intercept[Exception](build())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.io.FileNotFoundException]), e.toString)
+    }
+    // the scan fails before the driver writes any letter file
+    assert(!Files.exists(out.resolve("a.txt")))
   }
 }

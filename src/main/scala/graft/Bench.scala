@@ -63,7 +63,7 @@ object Bench {
       * are unchanged (EXPLAIN audit) and the residual is codec-path JIT
       * profile, not a plan regression.
       *
-      * Eagerly `localCheckpoint(true)`ed relations (pagerank / ppr / kmeans
+      * Eagerly pinned relations (pagerank / ppr / kmeans
       * / bpe each pin several per run) stay registered in the block manager
       * until the ContextCleaner notices the dead reference — asynchronous
       * and GC-driven, so across a 150+-entry single-JVM sweep the blocks

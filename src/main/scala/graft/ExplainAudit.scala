@@ -12,9 +12,32 @@ import org.apache.spark.sql.execution.FormattedMode
   * its DataFrame is built, so it contributes its [[Iteration]] body, the
   * plan each round repeats.
   *
+  * Plans go through [[planText]], so the artifact does not depend on
+  * which queries one JVM built before.
+  *
   * Usage: `runMain graft.ExplainAudit <outFile> [sfDir]`.
   */
 object ExplainAudit {
+
+  /** Counters a JVM hands out in build order: exchange ids (`[id=#N]`), AQE
+    * stage ids, expression ids, lambda variables, RDD ids, observation names.
+    */
+  private val Counter = """(id=#|plan_id=|#|\b[xyz]_|RDD\[|graft_cc_audit_)(\d+)""".r
+
+  /** `df`'s formatted plan with each [[Counter]] kind renumbered by first
+    * appearance, lambda classes without addresses and RDD call sites without
+    * source lines: a plan's text does not depend on what the JVM built before.
+    */
+  def planText(df: DataFrame): String = {
+    val seen = scala.collection.mutable.Map.empty[(String, String), Int]
+    Counter.replaceAllIn(df.queryExecution.explainString(FormattedMode)
+      .replaceAll("""\$\$Lambda[^\s,)\]]*@[0-9a-f]+""", "\\$\\$Lambda")
+      .replaceAll("""(RDD\[\d+\] at \w+) at [\w$.]+:\d+""", "$1"), { m =>
+      val kind = m.group(1)
+      val n = seen.getOrElseUpdate((kind, m.group(2)), seen.keys.count(_._1 == kind) + 1)
+      scala.util.matching.Regex.quoteReplacement(s"$kind$n")
+    })
+  }
 
   def main(args: Array[String]): Unit = {
     // no default: a stale hardcoded round number silently mislabels the
@@ -28,7 +51,7 @@ object ExplainAudit {
     val round = outFile.replaceAll("""^.*EXPLAIN_r0*(\d+).*$""", "$1")
     val sb = new StringBuilder
     def section(title: String, df: DataFrame): Unit =
-      sb ++= s"## $title\n\n```\n${df.queryExecution.explainString(FormattedMode)}```\n\n"
+      sb ++= s"## $title\n\n```\n${planText(df)}```\n\n"
     val (static, iterative) = SparkEntry.registry.partition(_.iteration.isEmpty)
     sb ++= s"# EXPLAIN audit — round $round ($sfDir, extensions installed, AQE on)\n\n"
     sb ++=

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
 import graft.operators.{Dedup, Similarity, Tokenize}
-import graft.operators.Graph.Pinned
 
 /** Replication-scaling harness for the capped pair generators — the
   * measured answer to "would this survive 100 TB", extending the
@@ -53,14 +53,15 @@ object ScaleBench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def want(p: String): Boolean = only.forall(_.contains(p))
     val spark = GraftSession(s"local[$cpus]", cpus)
-    // disk-backed materialization for the iterative graph loops: at factor
-    // 50 the replicated edge relation is ~55M rows, and an eager
-    // localCheckpoint pins every block in this single JVM's block manager —
-    // the r15 sweep OOMed at pagerank 50× on the default 8 GiB heap and had
-    // to fork to 24g. Routing Graph.pin() through a reliable on-disk
-    // checkpoint keeps the whole sweep inside the default heap; on a real
-    // cluster the default local mode is right (blocks spread over many
-    // executors) and this flag stays unset.
+    // disk-backed materialization for every pin(): at factor 50 the
+    // replicated edge relation is ~55M rows, and an eager localCheckpoint
+    // pins every block in this single JVM's block manager — the r15 sweep
+    // OOMed at pagerank 50× on the default 8 GiB heap and had to fork to
+    // 24g. The one policy (graft.functions.Materialize) sends the graph
+    // loops, the pair generators' internal checkpoints and this sweep's own
+    // pins to a reliable on-disk checkpoint instead; on a real cluster the
+    // default local mode is right (blocks spread over many executors) and
+    // this flag stays unset.
     val ckptDir = java.nio.file.Files
       .createTempDirectory("graft-scale-ckpt").toString
     spark.sparkContext.setCheckpointDir(ckptDir)
@@ -100,13 +101,11 @@ object ScaleBench {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
     val embs = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
 
-    // Release every persistent RDD EXCEPT the given keeper ids. The pair
-    // generators (setsimOrdered, dupExposure, cosineNearDupPairs, the
-    // pagerank loop) each pin internal localCheckpoints that nothing
-    // unpersists once the call returns; across 17 pipelines × 3 factors
-    // those scratch blocks accumulated past the heap at factor 50 (the
-    // first r14 run OOMed there) — so every section boundary clears all
-    // checkpoints it didn't create.
+    // Release every persistent RDD EXCEPT the given keeper ids. Local
+    // checkpoints that nothing unpersists once a call returns accumulated
+    // past the heap at factor 50 (the first r14 run OOMed there). Under the
+    // disk policy a pin() persists no blocks, so this has little left to
+    // release; it stays until a factor-50 sweep shows it can go.
     def clearExcept(keepIds: Set[Int]): Unit = {
       spark.sparkContext.getPersistentRDDs
         .filterNot { case (id, _) => keepIds.contains(id) }
@@ -146,7 +145,7 @@ object ScaleBench {
       if (want("simhash_pairs")) {
       val sigs = Dedup
         .simhash(Tokenize.tokens(d, "text", Seq("doc_id")), bits = 60)
-        .localCheckpoint(true)
+        .pin()
       var pairs = 0L
       val sSec = time {
         pairs = Dedup
@@ -438,8 +437,8 @@ object ScaleBench {
       var dl: DataFrame = null
       val buildSec = time {
         val toks = Tokenize.tokens(d, "text", Seq("doc_id"))
-        tf = graft.operators.InvertedIndex.tfPostings(toks).localCheckpoint(true)
-        dl = graft.operators.InvertedIndex.docLengths(toks).localCheckpoint(true)
+        tf = graft.operators.InvertedIndex.tfPostings(toks).pin()
+        dl = graft.operators.InvertedIndex.docLengths(toks).pin()
         tf.count(); dl.count()
       }
       var served = 0L
@@ -492,7 +491,7 @@ object ScaleBench {
       }
       val batch = replicated(
         docs.select((col("doc_id") + 500000000L).as("doc_id"), col("text")),
-        "doc_id", f).localCheckpoint(true)
+        "doc_id", f).pin()
       val aud = new org.apache.spark.sql.Observation(s"wminhash_cross_$f")
       var dups = 0L
       val xSec = time {
@@ -529,14 +528,14 @@ object ScaleBench {
           .withColumn("__rep", explode(sequence(lit(0), lit(f - 1))))
           .withColumn("doc_id", col("doc_id") + col("__rep").cast("long") * 1000000000L)
           .withColumn("text", concat(col("text"), lit(" rep"), col("__rep")))
-          .drop("__rep")).localCheckpoint(true)
+          .drop("__rep")).pin()
       val n0 = full.count()
       // 1: PII redaction — map-side
       var red: DataFrame = null
       val s1 = time {
         red = full
           .withColumn("text", graft.operators.CorpusClean.redactPii(col("text")))
-          .localCheckpoint(true)
+          .pin()
         red.count()
       }
       // 2: quality gate — map-side filter (the q_curate_pipeline gate)
@@ -548,7 +547,7 @@ object ScaleBench {
           .where(col("n_ws").between(5, 2000) &&
             col("n_alpha").cast("double") >= col("n_ws").cast("double") * 0.5)
           .select("doc_id", "lang", "source", "text")
-          .localCheckpoint(true)
+          .pin()
         gated.count()
       }
       // 3: exact dedup, keep-min on the content hash — one 32-byte-key shuffle
@@ -559,7 +558,7 @@ object ScaleBench {
           .agg(min_by(struct(col("doc_id"), col("lang"), col("source"), col("text")),
             col("doc_id")).as("r"))
           .select(col("r.doc_id"), col("r.lang"), col("r.source"), col("r.text"))
-          .localCheckpoint(true)
+          .pin()
         exact.count()
       }
       // 3b (r19 verdict task 5): paragraph-granularity strip — the C4
@@ -578,7 +577,7 @@ object ScaleBench {
             .select(col("doc_id"), col("kept_text")), Seq("doc_id"))
           .select(col("doc_id"), col("lang"), col("source"),
             col("kept_text").as("text"))
-          .localCheckpoint(true)
+          .pin()
         stripped.count()
       }
       // 4: minhash near-dup — index → banded candidates → exact-Jaccard
@@ -586,7 +585,7 @@ object ScaleBench {
       var neardup: DataFrame = null
       val s4 = time {
         val idx = Dedup.minhashIndex(stripped, shingleK = 3, numHashes = 16, bands = 8)
-        val cand = Dedup.candidatesFromIndex(idx, maxBucket = cap).localCheckpoint(true)
+        val cand = Dedup.candidatesFromIndex(idx, maxBucket = cap).pin()
         val candDocs = cand.select(col("doc1").as("doc_id"))
           .unionAll(cand.select(col("doc2").as("doc_id"))).distinct()
         val sh = idx.select(col("doc_id"), col("sh"))
@@ -602,7 +601,7 @@ object ScaleBench {
           .join(Dedup.duplicateGroups(verified), Seq("doc_id"), "left")
           .where(coalesce(col("group_id"), col("doc_id")) === col("doc_id"))
           .select("doc_id", "lang", "source", "text")
-          .localCheckpoint(true)
+          .pin()
         neardup.count()
       }
       // 5: decontamination against a fixed benchmark set (base ids ≤ 5)
@@ -613,7 +612,7 @@ object ScaleBench {
             .decontaminate(neardup, baseFull.where(col("doc_id") <= 5),
               k = 5, maxOverlap = 1)
             .select("doc_id"), Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
+          .pin()
         clean.count()
       }
       // 6: token-budget mixture sample (budgets scale with the corpus so
@@ -625,7 +624,7 @@ object ScaleBench {
             Map("en" -> 5000L * f, "de" -> 2000L * f, "es" -> 2000L * f,
               "fr" -> 2000L * f, "zh" -> 1000L * f))
             .select("doc_id"), Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
+          .pin()
         sampled.count()
       }
       // 7: sequence packing into 2048-token packs + manifests
@@ -634,7 +633,7 @@ object ScaleBench {
       val s7 = time {
         packsDf = graft.operators.Packing
           .packContents(graft.operators.Packing.packByOffset(sampled, budget = 2048))
-          .localCheckpoint(true)
+          .pin()
         packs = packsDf.count()
       }
       val nOut = sampled.count()
@@ -666,7 +665,7 @@ object ScaleBench {
           plan = graft.operators.Layout
             .shardPlanByCount(units.select(col("unit_id"), col("pack_tokens")),
               nSh, idCol = "unit_id", countCol = "pack_tokens")
-            .localCheckpoint(true)
+            .pin()
           plan.count()
         }
         val shardDir = java.nio.file.Files.createTempDirectory(s"graft-scale-tdb$f")
@@ -707,17 +706,17 @@ object ScaleBench {
         .select("doc_id", "lang", "text")
       val totals = graft.operators.Packing
         .packTotals(graft.operators.Packing.packByOffset(baseDocs, budget = 2048))
-        .localCheckpoint(true)
+        .pin()
       val man = graft.operators.Layout
         .shardManifest(graft.operators.Layout.shardPlan(baseDocs, nShards = 16))
-        .localCheckpoint(true)
+        .pin()
       val incrDir = java.nio.file.Files.createTempDirectory(s"graft-scale-tdi$f")
       graft.operators.Layout.shardWrite(spark, baseDocs, 16, incrDir.toString)
       // the batch: a 10% slice replicated ×f, ids shifted ABOVE every base
       // id (the append contract the incremental stages share)
       val batch = replicated(baseDocs.where(col("doc_id") % 10 === 0), "doc_id", f)
         .withColumn("doc_id", col("doc_id") + lit(10000000000L))
-        .localCheckpoint(true)
+        .pin()
       val nBatch = batch.count()
       var packed: DataFrame = null
       val p1 = time {
@@ -728,7 +727,7 @@ object ScaleBench {
       var assigned: DataFrame = null
       val p2 = time {
         assigned = graft.operators.Layout.shardAssignPos(man, batch)
-          .localCheckpoint(true)
+          .pin()
         assigned.count()
       }
       val p3 = time {
@@ -752,7 +751,7 @@ object ScaleBench {
       // coarse-assign + PQ-encode pass is the build; ADC queries read the
       // codes + the tiny centroid/codebook tables only
       if (want("ivfpq_amortize")) {
-      val e = replicated(embs, "vec_id", f).localCheckpoint(true)
+      val e = replicated(embs, "vec_id", f).pin()
       val cents = embs.where(col("vec_id") < 8)
       val queries = embs.where(col("vec_id").between(8, 17))
       val codebooks = (0 until 4)
@@ -765,7 +764,7 @@ object ScaleBench {
       var pqIdx: DataFrame = null
       val buildSec = time {
         pqIdx = Similarity.ivfpqIndex(corpus, cents, codebooks, m = 4, subDim = 16)
-          .localCheckpoint(true)
+          .pin()
         pqIdx.count()
       }
       var served = 0L
@@ -797,7 +796,7 @@ object ScaleBench {
       val vrep = replicated(media.toDF(), "media_id", f)
         .as[graft.operators.Multimodal.MediaRecord]
         .filter(_.kind == "video")
-        .localCheckpoint(true)
+        .pin()
       val vidO = new org.apache.spark.sql.Observation(s"video_neardup_$f")
       var vPairs = 0L
       val vdSec = time {
@@ -903,7 +902,7 @@ object ScaleBench {
         // text is replicated verbatim: pair volume scales x f at constant
         // vocabulary — the linear-by-construction check for the
         // positional equi-join pair stream
-        val dd = replicated(docs, "doc_id", f).localCheckpoint(true)
+        val dd = replicated(docs, "doc_id", f).pin()
         var sgRows = 0L
         val sgSec = time {
           sgRows = graft.operators.Cooccurrence
@@ -915,7 +914,7 @@ object ScaleBench {
       }
 
       if (want("embedding_neardup") || want("embedding_neardup_probe")) {
-      val e = replicated(embs, "vec_id", f).localCheckpoint(true)
+      val e = replicated(embs, "vec_id", f).pin()
       val n = e.count()
       val planes = Similarity.planesFor(n)
       var ePairs = 0L
@@ -954,7 +953,7 @@ object ScaleBench {
       // — so expected draws stay ℓ per round and wall time should track
       // corpus volume linearly at a ~constant candidate count.
       if (want("kmeans_par_init")) {
-      val e = replicated(embs, "vec_id", f).localCheckpoint(true)
+      val e = replicated(embs, "vec_id", f).pin()
       var kmCands = 0L
       val kmSec = time {
         kmCands = Similarity
@@ -978,7 +977,7 @@ object ScaleBench {
       val ev = replicated(
         graft.sources.EventsSource.events(spark, sfDir)
           .select("user_id", "event_id", "ts_us"),
-        "user_id", f).localCheckpoint(true)
+        "user_id", f).pin()
       val byUser = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(asc("ts_us"), asc("event_id"))
       var nSess = 0L
@@ -1013,8 +1012,8 @@ object ScaleBench {
           ((col("o_orderkey") * mult) % 1000).cast("double").as(s"${pre}_lo"))
         .withColumn(s"${pre}_hi",
           col(s"${pre}_lo") + lit(1.0) + (col(s"${pre}_id") % spanMod).cast("double"))
-      val aIv = replicated(ivSide(0, 37, 20, "a"), "k", f, offset = 50L).localCheckpoint(true)
-      val bIv = replicated(ivSide(1, 53, 13, "b"), "k", f, offset = 50L).localCheckpoint(true)
+      val aIv = replicated(ivSide(0, 37, 20, "a"), "k", f, offset = 50L).pin()
+      val bIv = replicated(ivSide(1, 53, 13, "b"), "k", f, offset = 50L).pin()
       var ivPairs = 0L
       val ivSec = time {
         ivPairs = graft.operators.RangeJoin
@@ -1043,7 +1042,7 @@ object ScaleBench {
         graft.sources.EventsSource.events(spark, sfDir).select("user_id", "event_id"),
         "user_id", f)
         .selectExpr("cast(user_id AS string) AS k")
-        .localCheckpoint(true)
+        .pin()
       var topSketch = 0L
       val skSec = time {
         topSketch = evHeavy.selectExpr("spacesaving_topk(k, 64) AS sk")
@@ -1103,7 +1102,7 @@ object ScaleBench {
       var postings: DataFrame = null
       val buildSec = time {
         postings = Engine.indexFromManifest(spark, mf.toString, baseDir)
-          .localCheckpoint(true)
+          .pin()
       }
       val nPost = postings.count()
       val exactSec = time {

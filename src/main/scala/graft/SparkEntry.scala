@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
 import graft.functions.TextAnalysis
 import graft.operators.{Dedup, InvertedIndex, Sampling, Search, Similarity, Tokenize}
 
@@ -94,7 +95,7 @@ object SparkEntry {
       .groupBy(col("h"))
       .agg(min_by(struct(col("doc_id"), col("lang"), col("source")), col("doc_id")).as("r"))
       .select(col("r.doc_id"), col("r.lang"), col("r.source"))
-      .localCheckpoint(true)
+      .pin()
     Sampling
       .perGroupCap(kept, "source", "doc_id", cap = 20)
       .join(kept.select(col("doc_id"), col("lang")), Seq("doc_id"))
@@ -1255,7 +1256,7 @@ object SparkEntry {
         .groupBy(col("source"))
         .agg(expr("kmv_ndv(word, 16)").as("r"))
         .select(col("source"), col("r.sample").as("sample"))
-        .localCheckpoint(true) // the materialized store (parquet in production)
+        .pin() // the materialized store (parquet in production)
       store1
         .select(col("source"), explode(col("sample")).as("word"))
         .unionByName(toks.where(col("doc_id") >= 250).select(col("source"), col("word")))
@@ -3838,7 +3839,7 @@ object SparkEntry {
       // they feed the verify join AND the doc-set restriction.
       val idx = Dedup.minhashIndex(docs, shingleK = 3, numHashes = 16, bands = 8)
       val cand = Dedup.candidatesFromIndex(idx, maxBucket = 4096)
-        .localCheckpoint(true)
+        .pin()
       val candDocs = cand.select(col("doc1").as("doc_id"))
         .unionAll(cand.select(col("doc2").as("doc_id")))
         .distinct()
@@ -4219,7 +4220,7 @@ object SparkEntry {
         .withColumn("band", least(floor(col("jaccard") * 10), lit(9.0)).cast("int"))
         .groupBy(col("band"))
         .agg(count(lit(1)).as("n_pairs"))
-        .localCheckpoint(true)
+        .pin()
       banded
         .join(banded.select(col("band").as("b2"), col("n_pairs").as("n2")),
           col("b2") >= col("band"))
@@ -4987,7 +4988,7 @@ object SparkEntry {
         .reduce(_ unionAll _)
       val index = Similarity
         .ivfpqIndex(emb.where(col("vec_id") >= 18), cents, codebooks, m = 4, subDim = 16)
-        .localCheckpoint(true) // stands in for the persisted index table
+        .pin() // stands in for the persisted index table
       Similarity
         .ivfpqSearchIndexed(
           index, cents, codebooks,
@@ -5161,7 +5162,7 @@ object SparkEntry {
           factor = 4))
         .toDF()
         .select(col("media_id"), col("duration_ms"))
-        .localCheckpoint(true)
+        .pin()
         .orderBy("media_id")
     },
       // audio-downsample mirror: frames' = ceil(frames/4) at 250 Hz, and

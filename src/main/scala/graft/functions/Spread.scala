@@ -28,20 +28,24 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Spread {
   def apply(df: DataFrame, keys: Column*): DataFrame = {
     require(keys.nonEmpty, "Spread needs at least one deterministic key column")
-    val sess    = df.sparkSession
-    val target  = sess.sparkContext.defaultParallelism
-    val split   = sess.sessionState.conf.filesMaxPartitionBytes
-    val narrow  =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes <
-        BigInt(split) * math.max(1, target / 2)
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (narrow) df.repartition(target, keys: _*) else df
+    if (narrow(df)) df.repartition(target(df), keys: _*) else df
   }
+
+  /** Keyless stats-guarded fan — [[apply]]'s narrow test, round-robin
+    * re-fan. For the compute-dense stage ABOVE an aggregate whose own hash
+    * partitioning would let a same-key repartition be elided (and then
+    * AQE-coalesced): a keyless exchange cannot be elided, and its explicit
+    * partition count cannot be coalesced. Identity on wide/unknown-size
+    * plans, so checkpoint-derived callers (whose stats report the
+    * unknown-size default) and cluster-scale plans are untouched.
+    */
+  def fan(df: DataFrame): DataFrame =
+    if (narrow(df)) df.repartition(target(df)) else df
 
   /** Parallelism repair for a compute-dense segment ABOVE a post-shuffle
     * stage, decided by the ACTUAL partition count of an already-
     * materialized upstream relation (`anchor`, typically the operator's
-    * eager localCheckpoint) instead of planner stats — checkpointed inputs
+    * eager [[Materialize]] pin) instead of planner stats — checkpointed inputs
     * report the unknown-size default and blind the stats guard above.
     *
     * The pathology (r21 profiling, guide §2): AQE's byte-based coalescing
@@ -56,35 +60,26 @@ object Spread {
     * anchor this is the identity: no exchange is ever added on a cluster,
     * where the post-shuffle stage is already parallel.
     */
-  /** Keyless stats-guarded fan — [[apply]]'s narrow test, round-robin
-    * re-fan. For the compute-dense stage ABOVE an aggregate whose own hash
-    * partitioning would let a same-key repartition be elided (and then
-    * AQE-coalesced): a keyless exchange cannot be elided, and its explicit
-    * partition count cannot be coalesced. Identity on wide/unknown-size
-    * plans, so checkpoint-derived callers (whose stats report the
-    * unknown-size default) and cluster-scale plans are untouched.
-    */
-  def fan(df: DataFrame): DataFrame = {
-    val sess    = df.sparkSession
-    val target  = sess.sparkContext.defaultParallelism
-    val split   = sess.sessionState.conf.filesMaxPartitionBytes
-    val narrow  =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes <
-        BigInt(split) * math.max(1, target / 2)
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (narrow) df.repartition(target) else df
-  }
-
   def fanFrom(anchor: DataFrame, df: DataFrame, keys: Column*): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
+    val n = target(df)
     val narrow =
-      try anchor.rdd.getNumPartitions < math.max(1, target / 2)
+      try anchor.rdd.getNumPartitions < math.max(1, n / 2)
       catch { case scala.util.control.NonFatal(_) => false }
     if (!narrow) df
     // keyed form: used immediately below a join/agg that REQUIRES this hash
     // partitioning, so the explicit (non-coalescible) exchange doubles as
     // the join's required distribution and no second exchange appears
-    else if (keys.nonEmpty) df.repartition(target, keys: _*)
-    else df.repartition(target)
+    else if (keys.nonEmpty) df.repartition(n, keys: _*)
+    else df.repartition(n)
+  }
+
+  private def target(df: DataFrame): Int = df.sparkSession.sparkContext.defaultParallelism
+
+  // the planner's size estimate cannot fill half the cores at the split size
+  private def narrow(df: DataFrame): Boolean = {
+    val split = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    try df.queryExecution.optimizedPlan.stats.sizeInBytes <
+      BigInt(split) * math.max(1, target(df) / 2)
+    catch { case scala.util.control.NonFatal(_) => false }
   }
 }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
 import graft.operators.Tokenize
 
 /** Text-analysis operators for a large-scale training-data pipeline:
@@ -19,9 +20,6 @@ object TextAnalysis {
     * SQL regexp_split semantics on both engines).
     */
   def wsTokenCount(text: Column): Column = size(split(text, "\\s+"))
-
-  /** Count of alphabetic tokens surviving the reference tokenizer. */
-  def alphaTokenCount(text: Column): Column = size(Tokenize.tokenArray(text))
 
   /** BPE-ish subword proxy: maximal alpha or digit runs (a cheap, portable
     * stand-in for a real subword tokenizer's token count).
@@ -356,15 +354,15 @@ object TextAnalysis {
     val spark = docs.sparkSession
     import spark.implicits._
     val (featsLazy, labelsLazy) = logregFeaturePlan(docs, label, buckets, idCol, textCol)
-    val feats = featsLazy.localCheckpoint(true)
-    val labels = labelsLazy.localCheckpoint(true)
+    val feats = featsLazy.pin()
+    val labels = labelsLazy.pin()
     val nDocs = labels.count()
     var bias = 0L
     var w = Map.empty[Long, Long]
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     for (it <- 1 to rounds) {
       val wDf = w.toSeq.toDF("__b", "__wm")
-      val errs = logregErrors(feats, labels, wDf, bias, idCol).localCheckpoint(true)
+      val errs = logregErrors(feats, labels, wDf, bias, idCol).pin()
       // one shuffle, one action: per-bucket gradients ∪ the bias gradient
       val gAll = logregGradients(feats, errs, idCol)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -604,7 +602,7 @@ object TextAnalysis {
                 element_at(col("__toks"), i + 1)).as("bigram"))))
           .otherwise(array().cast("array<struct<w1:string,bigram:string>>"))).as("b"))
       .select(col(idCol), col("b.w1").as("w1"), col("b.bigram").as("bigram"))
-      .localCheckpoint(true)
+      .pin()
     val uni = toks
       .select(explode(col("__toks")).as("w"))
       .groupBy(col("w"))
@@ -680,12 +678,12 @@ object TextAnalysis {
               element_at(col("__toks"), i + 1).as("w2"))))
           .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("b"))
       .select(col(idCol), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .localCheckpoint(true)
+      .pin()
     // the bigram TYPE relation — everything the model needs derives from
     // it, so it too is materialized once (three consumers below)
     val c2 = big.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("n2"))
-      .localCheckpoint(true)
+      .pin()
     val ctx = c2.groupBy(col("w1"))
       .agg(sum(col("n2")).as("c1"), count(lit(1)).as("fanout"))
     val cont = c2.groupBy(col("w2")).agg(count(lit(1)).as("contw2"))
@@ -768,13 +766,13 @@ object TextAnalysis {
       .withColumn("__b",
         graft.functions.HexSlice.u(md5(concat(lit("dsir:"), col("__f"))), 1, 15) % buckets)
       .select(col(idCol), col("__tgt"), col("__b"))
-      .localCheckpoint(true)
+      .pin()
     val cnt = feats
       .groupBy(col("__b"))
       .agg(
         count(lit(1)).as("__nr"),
         sum(when(col("__tgt"), 1L).otherwise(0L)).as("__nt"))
-      .localCheckpoint(true) // BUCKETS-sized; consumed by ratios AND totals
+      .pin() // BUCKETS-sized; consumed by ratios AND totals
     // bucket-space log ratios: totals fold off the bucket counts (no
     // corpus re-scan); join legs renamed around the totals self-reference
     val ratios = cnt
@@ -880,7 +878,7 @@ object TextAnalysis {
   def bpeMerges(tokens: DataFrame, k: Int, wordCol: String = "word"): DataFrame = {
     require(k >= 1, s"k ($k) must be >= 1")
     val spark = tokens.sparkSession
-    var vocab = bpeVocabPlan(tokens, wordCol).localCheckpoint(true)
+    var vocab = bpeVocabPlan(tokens, wordCol).pin()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var exhausted = false
     for (it <- 1 to k if !exhausted) {
@@ -901,7 +899,7 @@ object TextAnalysis {
                      element_at(acc, -1) === lit(a) && x === lit(b),
                   concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
                   .otherwise(concat(acc, array(x)))))
-          .localCheckpoint(true)
+          .pin()
       }
     }
     import spark.implicits._
@@ -989,7 +987,7 @@ object TextAnalysis {
   def wordpieceMerges(tokens: DataFrame, k: Int, wordCol: String = "word"): DataFrame = {
     require(k >= 1, s"k ($k) must be >= 1")
     val spark = tokens.sparkSession
-    var vocab = wordpieceVocabPlan(tokens, wordCol).localCheckpoint(true)
+    var vocab = wordpieceVocabPlan(tokens, wordCol).pin()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long, Long, Long)]
     var exhausted = false
     for (it <- 1 to k if !exhausted) {
@@ -1010,7 +1008,7 @@ object TextAnalysis {
                      element_at(acc, -1) === lit(a) && x === lit(b),
                   concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
                   .otherwise(concat(acc, array(x)))))
-          .localCheckpoint(true)
+          .pin()
       }
     }
     import spark.implicits._
@@ -1041,7 +1039,7 @@ object TextAnalysis {
     var df = words.withColumn("pieces",
       filter(split(col(wordCol), ""), s => s =!= ""))
     merges.grouped(8).zipWithIndex.foreach { case (grp, gi) =>
-      if (gi > 0) df = df.localCheckpoint(true)
+      if (gi > 0) df = df.pin()
       grp.foreach { pair =>
         val Array(a, b) = pair.split(" ", 2)
         df = df.withColumn("pieces",
@@ -1211,7 +1209,7 @@ object TextAnalysis {
       .withColumn("word", Tokenize.cleanToken(col("__raw")))
       .where(length(col("word")) > 0)
       .select(col(idCol), col("__pos"), col("word"))
-      .localCheckpoint(true)
+      .pin()
     val seg = bpeApply(toks.select("word").distinct(), merges)
       .select(col("word"),
         transform(col("pieces"), p => element_at(idMap, p)).as("__wids"))
@@ -1338,7 +1336,7 @@ object TextAnalysis {
     val words = tokens
       .where(length(col(wordCol)) <= maxWordLen)
       .groupBy(col(wordCol).as("w")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .pin()
     // seed substrings, per-occurrence within the word, frequency-weighted
     val subs = words
       .select(col("n"), explode(expr(
@@ -1346,12 +1344,12 @@ object TextAnalysis {
             transform(sequence(i, least(length(w), i + ${maxPieceLen - 1})), j ->
               substring(w, i, j - i + 1))))""")).as("piece"))
       .groupBy(col("piece")).agg(sum(col("n")).as("cnt"))
-      .localCheckpoint(true)
+      .pin()
     val chars = subs.where(length(col("piece")) === 1)
     var cur = chars.unionByName(
       subs.where(length(col("piece")) >= 2)
         .orderBy(desc("cnt"), asc("piece")).limit(seedSize))
-      .localCheckpoint(true)
+      .pin()
     for (_ <- 1 to emRounds) {
       val counts = viterbiPath(words, logp6Map(cur), maxPieceLen, maxWordLen)
         .select(col("n"), explode(split(col("__path"), " ")).as("piece"))
@@ -1362,12 +1360,12 @@ object TextAnalysis {
         chars.select(col("piece"))
           .join(counts.select(col("piece")), Seq("piece"), "left_anti")
           .withColumn("cnt", lit(1L)))
-        .localCheckpoint(true)
+        .pin()
     }
     val pruned = cur.where(length(col("piece")) === 1).unionByName(
       cur.where(length(col("piece")) >= 2)
         .orderBy(desc("cnt"), asc("piece")).limit(keepMulti))
-      .localCheckpoint(true)
+      .pin()
     (words, pruned)
   }
 
@@ -1424,7 +1422,7 @@ object TextAnalysis {
       }
       df = df.withColumn(s"__b$i",
         when(length(col("w")) >= i, array_min(array(cands: _*))))
-      if (i % 2 == 0 && i < maxWordLen) df = df.localCheckpoint(true)
+      if (i % 2 == 0 && i < maxWordLen) df = df.pin()
     }
     val path = (1 to maxWordLen).foldLeft(lit(null).cast("string")) { (acc, i) =>
       when(length(col("w")) === i, col(s"__b$i").getField("path")).otherwise(acc)
@@ -1500,7 +1498,7 @@ object TextAnalysis {
     val fof = tokens
       .groupBy(col("word")).agg(count(lit(1)).as("__c"))
       .groupBy(col("__c").as("r")).agg(count(lit(1)).as("n_r"))
-      .localCheckpoint(true)
+      .pin()
     val nTok = broadcast(fof.agg(sum(col("r") * col("n_r")).as("__n")))
     val p0 = broadcast(fof.where(col("r") === 1)
       .select(col("n_r").as("__n1")))
@@ -1544,7 +1542,7 @@ object TextAnalysis {
       k: Int = 3): DataFrame = {
     val sh = withShingles(df.select(col(idCol), col(textCol)), textCol, k)
       .select(col(idCol), explode(col("shingles")).as("__sh"))
-      .localCheckpoint(true)
+      .pin()
     val first = sh.groupBy(col("__sh")).agg(min(col(idCol)).as("__first"))
     sh
       .join(first, Seq("__sh"))
@@ -1646,7 +1644,7 @@ object TextAnalysis {
       .select(col(sourceCol).as("source"), col("word"))
       .groupBy(col("source"), col("word"))
       .agg(count(lit(1)).as("__a"))
-      .localCheckpoint(true)
+      .pin()
     val topW = cnt.groupBy(col("word")).agg(sum(col("__a")).as("__n"))
       .orderBy(col("__n").desc, col("word").asc).limit(topM)
       .select(col("word"))
@@ -1658,7 +1656,7 @@ object TextAnalysis {
       .select(col("source"), col("word"),
         floor(col("__a").cast("double") / col("__n1").cast("double") * 1e6 + lit(0.5))
           .cast("long").as("__f6"))
-      .localCheckpoint(true)
+      .pin()
     val mu6 = col("__s1").cast("double") / col("__ns").cast("double")
     val stats = f6
       .groupBy(col("word"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
+
 /** Context-window chunking: split each document's token stream into
   * fixed-size, optionally-overlapping windows — the step between cleaning
   * and tokenizer in every pretraining pipeline that trains on long
@@ -85,7 +87,7 @@ object Chunking {
       .select(col("doc_id"), posexplode(col("__toks")).as(Seq("__i", "__w")))
       .groupBy(col("doc_id"), (col("__i") / block).cast("int").as("__b"), col("__w"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .pin()
     val norms = tc.groupBy(col("doc_id"), col("__b"))
       .agg(sum(col("__c") * col("__c")).as("__q"))
     val dots = tc.as("a")
@@ -217,7 +219,7 @@ object Chunking {
     val chunks = chunkByContent(docs, modulus, idCol, textCol)
       .select(col(idCol).as("id"), col("chunk_hash"))
       .distinct()
-      .localCheckpoint(true)
+      .pin()
     val sizes = chunks.groupBy(col("id")).agg(count(lit(1)).as("n_chunks"))
     val rare = chunks
       .groupBy(col("chunk_hash")).agg(count(lit(1)).as("__df"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
 import graft.functions.Portable
 
 /** Corpus co-occurrence statistics: which terms appear together more often
@@ -132,7 +133,7 @@ object Cooccurrence {
     require(minPair >= 1, s"minPair ($minPair) must be >= 1")
     val pairs = windowPairs(docs, textCol, idCol, window)
     val cnt = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_ab"))
-      .localCheckpoint(true)
+      .pin()
     // vocabulary-keyed shuffle joins, NOT broadcasts: the marginal
     // relation is vocab-sized and a web-scale vocabulary doesn't fit an
     // executor broadcast; only the one-row total rides broadcast
@@ -203,7 +204,7 @@ object Cooccurrence {
     // and re-dedups the corpus (round 7's first audit: a 917-node plan).
     // Materialize the distinct (doc, word) relation once — the
     // Graph.pagerank / Dedup.duplicateGroups pattern.
-    val dt  = tokens.select(col(idCol), col("word")).distinct().localCheckpoint(true)
+    val dt  = tokens.select(col(idCol), col("word")).distinct().pin()
     val nd  = dt.select(col(idCol)).distinct().agg(count(lit(1)).cast("double").as("n_docs"))
     val dfs = dt.groupBy(col("word")).agg(count(lit(1)).as("df_w"))
     // band (vocabulary-sized) is itself referenced four times; left lazy,
@@ -212,7 +213,7 @@ object Cooccurrence {
       .crossJoin(broadcast(nd))
       .where(col("df_w") >= minDf && col("df_w") <= col("n_docs") * maxDfFrac)
       .select(col("word"), col("df_w"))
-      .localCheckpoint(true)
+      .pin()
     val dtb = dt.join(band.select(col("word")), Seq("word"))
     val pairs = dtb
       .select(col(idCol), col("word").as("w1"))
@@ -261,7 +262,7 @@ object Cooccurrence {
       .select(col(sourceCol).as("source"), col("word"))
       .groupBy(col("source"), col("word"))
       .agg(count(lit(1)).as("a"))
-      .localCheckpoint(true)
+      .pin()
     val wt = cnt.groupBy(col("word")).agg(sum(col("a")).as("wtot"))
     val st = cnt.groupBy(col("source")).agg(sum(col("a")).as("n1"))
     val tot = st.agg(sum(col("n1")).as("nn"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
 import graft.functions.TextAnalysis
 
 /** Deduplication operators for training-data pipelines.
@@ -111,7 +112,7 @@ object Dedup {
     // moreLikeThis re-computation trap all over again).
     val base = minhashIndex(docs, idCol, textCol, shingleK, numHashes, bands)
     // pairs feed the doc-set restriction AND the verify join → checkpoint
-    val pairs = candidatesFromIndex(base, idCol, maxBucket, dropAudit).localCheckpoint(true)
+    val pairs = candidatesFromIndex(base, idCol, maxBucket, dropAudit).pin()
     // restrict BOTH verify sides to docs that appear in a candidate pair
     // BEFORE joining: without this, each side join shuffles the whole
     // index's (sh, sig) arrays for a pair-count-sized output (measured
@@ -181,34 +182,19 @@ object Dedup {
     */
   val SlicesPerDigest = 4
 
-  /** MinHash signature entries, computed entirely map-side over a
-    * MATERIALIZED shingle-array column (no explode, no shuffle; see
-    * TextAnalysis.shinglesFromToks for why the column must be bound, not
-    * inlined).
-    *
-    * Portable: signature_{4g+j} = min over shingles of
-    * substr(md5(g || ':' || shingle), 8j+1, 8) — md5 bits are uniform, so
-    * the four 8-hex slices of one digest are independent 32-bit hashes
-    * (lexicographic min on fixed-width hex == numeric min).
-    */
-  def minhashSignatureFromShingles(sh: Column, numHashes: Int): Column = {
-    require(numHashes % SlicesPerDigest == 0,
-      s"numHashes ($numHashes) must be a multiple of $SlicesPerDigest (hashes are sliced from md5 digests)")
-    array((0 until numHashes).map { i =>
-      val group = i / SlicesPerDigest
-      val slice = i % SlicesPerDigest
-      array_min(transform(sh, s => substring(md5(concat(lit(s"$group:"), s)), slice * 8 + 1, 8)))
-    }: _*)
-  }
-
-  /** The same signature as [[minhashSignatureFromShingles]] built from
-    * PRE-MATERIALIZED per-group digest columns (`__mh0`..`__mh{g-1}`):
-    * higher-order lambdas evaluate interpreted with no cross-lambda CSE, so
-    * computing the digest array once per group and slicing it four times is
-    * the difference between g and 4g md5 evaluations per shingle. The digest
-    * columns must be BOUND (withColumn), not inlined — CollapseProject keeps
-    * non-cheap aliases referenced more than once un-collapsed, which is what
-    * makes the sharing real.
+  /** MinHash signature entries, computed map-side from PRE-MATERIALIZED
+    * per-group digest arrays (`__mh0`..`__mh{g-1}`, the md5 of
+    * `g || ':' || shingle` for every shingle). Portable: signature_{4g+j} =
+    * min over shingles of substr(md5(g || ':' || shingle), 8j+1, 8) — md5
+    * bits are uniform, so the four 8-hex slices of one digest are
+    * independent 32-bit hashes (lexicographic min on fixed-width hex ==
+    * numeric min). Higher-order lambdas evaluate interpreted with no
+    * cross-lambda CSE, so computing the digest array once per group and
+    * slicing it four times is the difference between g and 4g md5
+    * evaluations per shingle. The digest columns must be BOUND
+    * (withColumn), not inlined — CollapseProject keeps non-cheap aliases
+    * referenced more than once un-collapsed, which is what makes the
+    * sharing real.
     */
   private def signatureFromDigests(numHashes: Int): Column = {
     import org.apache.spark.sql.GraftBridge
@@ -342,7 +328,7 @@ object Dedup {
     withShingleSig(docs, idCol, textCol, shingleK, numHashes)
       .select(col(idCol), col("__sh").as("sh"), col("__sig").as("sig"),
         bandKeys(col("__sig"), bands, numHashes / bands).as("band_keys"))
-      .localCheckpoint(true)
+      .pin()
   }
 
   /** WEIGHTED MinHash candidate pairs via Ioffe's Improved Consistent
@@ -416,14 +402,13 @@ object Dedup {
     * un-materialized read re-runs the whole tokenize+shingle+explode
     * derivation (~3.3 s of the measured 18 s at sf0.1); linear in corpus
     * size, the [[Similarity.cosineNearDupPairs]] banded-relation
-    * discipline — on a cluster, persist-with-spill or durable checkpoint
-    * plays the same role.
+    * discipline.
     */
   private[graft] def wOcc(nonEmpty: DataFrame, idCol: String, textCol: String,
       shingleK: Int): DataFrame =
     TextAnalysis.withShingles(nonEmpty, textCol, shingleK, "__sh")
       .select(col(idCol), explode(col("__sh")).as("__s"))
-      .localCheckpoint(true)
+      .pin()
 
   /** The vocabulary-sized ICWS draw table `(__s, __w, __e0..__e{n−1})`,
     * checkpointed — the per-corpus-snapshot relation every weighted
@@ -484,7 +469,7 @@ object Dedup {
     // __w rides along for the weighted-Jaccard verification consumers.
     drawRel.select(
       col("__s") +: col("__w") +: (0 until numHashes).map(g => drawEnc(g, u)): _*)
-      .localCheckpoint(true)
+      .pin()
   }
 
   /** Per-doc `(idCol, band_keys array<string>)` from the occurrence stream
@@ -561,7 +546,7 @@ object Dedup {
       .agg(sort_array(collect_set(col("__s"))).as("sh"))
     val index = wBandKeys(occ, draws, idCol, numHashes, bands)
       .join(sh, Seq(idCol))
-      .localCheckpoint(true)
+      .pin()
     WminhashIndex(draws, index)
   }
 
@@ -638,7 +623,7 @@ object Dedup {
       .select(col("cids"), explode(col("nids")).as("new_id"))
       .select(col("new_id"), explode(col("cids")).as("corpus_id"))
       .distinct()
-      .localCheckpoint(true)
+      .pin()
     // exact weighted-Jaccard verification on candidates only, all inputs
     // from materialized relations: batch shingles from occNew, corpus
     // shingles from the index's sh arrays, weights from the draw table —
@@ -843,7 +828,7 @@ object Dedup {
       .select(col("cids"), explode(col("nids")).as("new_id"))
       .select(col("new_id"), explode(col("cids")).as("corpus_id"))
       .distinct()
-      .localCheckpoint(true)
+      .pin()
     // exact verification on candidates only — and the candidate filter
     // runs BEFORE shingling: semi-join the raw docs down to candidate ids
     // first, so verification never tokenizes the corpus. explode_OUTER,
@@ -862,9 +847,9 @@ object Dedup {
         .where(col("s").isNotNull)
         .distinct()
     val ns = shSet(newDocs, cand.select(col("new_id").as(idCol)).distinct(), "new_id")
-      .localCheckpoint(true)
+      .pin()
     val cs = shSet(corpus, cand.select(col("corpus_id").as(idCol)).distinct(), "corpus_id")
-      .localCheckpoint(true)
+      .pin()
     val nSz = ns.groupBy(col("new_id")).agg(count(lit(1)).as("n1"))
     val cSz = cs.groupBy(col("corpus_id")).agg(count(lit(1)).as("n2"))
     cand
@@ -1029,8 +1014,7 @@ object Dedup {
     * all shuffles are on doc_id keys, never payloads. Rounds needed = the
     * component diameter; near-dup clusters are small and dense, so a
     * handful of rounds converges (the loop checks an explicit fixpoint and
-    * `localCheckpoint` truncates the growing lineage each round; on a
-    * cluster, `checkpoint` to durable storage plays the same role).
+    * a `pin()` truncates the growing lineage each round).
     */
   def duplicateGroups(
       pairs: DataFrame,
@@ -1043,7 +1027,7 @@ object Dedup {
     // of the sf0.1 q_dedup_groups wall time)
     val p = pairs
       .select(col(col1).as("src"), col(col2).as("dst"))
-      .localCheckpoint(true)
+      .pin()
     // the symmetric closure stays LAZY: both branches scan the already-
     // checkpointed `p`, so per-round cost is two cached scans + union —
     // the same bytes a dedicated edges checkpoint would read, without
@@ -1058,7 +1042,7 @@ object Dedup {
       .agg(min(col("dst")).as("__nbr"))
       .select(col("doc_id"), least(col("doc_id"), col("__nbr")).as("group_id"))
       .observe("graft_cc_init", count(lit(1)).as("n_vertices"))
-    var labels = observedInit.localCheckpoint(true)
+    var labels = observedInit.pin()
     // candidate-pair graphs are normally TINY next to the corpus (edges ≈
     // true duplicate density): below the threshold, broadcast the label
     // side so each round is ONE shuffle (the neighbor-min agg) instead of
@@ -1076,7 +1060,7 @@ object Dedup {
     while (!converged) {
       val metricName = s"graft_cc_round_$round"
       val observed = ccRound(edges, labels, maybeBroadcast, metricName)
-      val next = observed.localCheckpoint(true)
+      val next = observed.pin()
       converged = observed.queryExecution.observedMetrics
         .get(metricName).forall(_.getLong(0) == 0L)
       labels = next.select("doc_id", "group_id")
@@ -1105,7 +1089,7 @@ object Dedup {
     * `labels` is referenced three times per round, so an untruncated
     * logical plan grows ~3^rounds subtrees and ANALYSIS time (which runs
     * before cached-plan substitution) explodes; the ContextCleaner frees
-    * old blocks. (On a cluster, durable `checkpoint` plays the same role.)
+    * old blocks.
     */
   private def ccRound(
       edges: DataFrame,
@@ -1212,7 +1196,7 @@ object Dedup {
       .where(col("shingle").isNotNull)
       .select(col("id"),
         graft.functions.HexSlice.u(md5(col("shingle")), 1, 15).as("h"))
-      .localCheckpoint(true)
+      .pin()
     val dfreq0 = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
     // stop-shingle audit: the cut's mass rides the run itself (the
     // simhashPairs dropAudit discipline) — how many distinct shingles the
@@ -1251,7 +1235,7 @@ object Dedup {
         transform(col("ord"), x => x.getField("h")).as("set"),
         size(col("ord")).as("sz"))
       .withColumn("p", (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast("int"))
-      .localCheckpoint(true)
+      .pin()
   }
 
   /** Each doc's prefix entries (id, sz, pos0, h) — the rows whose per-h
@@ -1505,7 +1489,7 @@ object Dedup {
           s" i -> md5(array_join(slice(__t, i + 1, $anchorK), ' ')))"))
         .as(Seq("__p", "__g")))
       // read twice (df counts + the join) — materialize the tokenize
-      .localCheckpoint(true)
+      .pin()
     val counts = grams.groupBy(col("__g")).agg(count(lit(1)).as("__n"))
     val audited = dropAudit.fold(counts) { o =>
       val ms = dropMetrics(col("__n"), dfCap)
@@ -1618,7 +1602,7 @@ object Dedup {
       .select(col(idCol), explode(col("shingles")).as("__s"))
     val sh = (if (hashKeys) exploded.select(col(idCol), xxhash64(col("__s")).as("sh"))
               else exploded.withColumnRenamed("__s", "sh"))
-      .localCheckpoint(true)
+      .pin()
     val totals = sh
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shingles"))
@@ -1745,7 +1729,7 @@ object Dedup {
     // lazy, the whole banding pipeline would re-run three times (measured
     // 9.1 s -> ~3 s at sf0.1); the normalized text is likewise consumed by
     // both join legs and is only candidate-doc-sized after the semi-join
-    val cand = candidates.localCheckpoint(true)
+    val cand = candidates.pin()
     val candDocs = cand.select(col("doc1").as(idCol))
       .unionAll(cand.select(col("doc2").as(idCol)))
       .distinct()
@@ -1753,7 +1737,7 @@ object Dedup {
       .select(col(idCol),
         concat_ws(" ", Tokenize.tokenArray(col(textCol))).as("__nt"))
       .join(candDocs, Seq(idCol), "left_semi")
-      .localCheckpoint(true)
+      .pin()
     val joined = cand
       .join(norm.select(col(idCol).as("doc1"), col("__nt").as("__t1")), Seq("doc1"))
       .join(norm.select(col(idCol).as("doc2"), col("__nt").as("__t2")), Seq("doc2"))
@@ -1787,7 +1771,7 @@ object Dedup {
         when(col("__k1") === col("__k2"), lit(0))
           .otherwise(levenshtein(col("__t1"), col("__t2"), maxDist)).as("dist"),
         greatest(length(col("__t1")), length(col("__t2"))).as("__ml"))
-      .localCheckpoint(true)
+      .pin()
     joined.select(col("doc1"), col("doc2"), col("__k1"), col("__k2"))
       .join(dk, Seq("__k1", "__k2"))
       .where(col("dist") >= 0)
@@ -1858,7 +1842,7 @@ object Dedup {
     // materialized ONCE (doc-interval-bounded, tiny): it feeds the
     // affected-doc id set AND the strip positions — lazy, the whole spans
     // pipeline (the expensive part) would re-run per consumer
-    val mergedC = merged.localCheckpoint(true)
+    val mergedC = merged.pin()
     // prune-to-affected split (r18 verdict task): only docs that carry at
     // least one merged interval enter the positional join — every other
     // document's kept_text is its normalized rejoin, MAP-SIDE (the anti
@@ -2058,7 +2042,7 @@ object Dedup {
         .as(Seq("par_idx", "par_text")))
       .select(col(idCol), col("par_idx"),
         sha2(col("par_text"), 256).as("__h"), parOkey(idCol).as("__okey"))
-      .localCheckpoint(true)
+      .pin()
     val keepers = occ.groupBy(col("__h")).agg(min(col("__okey")).as("__keep"))
     val dupPerDoc = occ
       .join(keepers, Seq("__h"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
 import graft.functions.Portable
 
 /** Iterative graph analytics over relational edge lists — the PageRank /
@@ -14,39 +15,17 @@ import graft.functions.Portable
   * is contribution-join → sum-by-dst → teleport (no driver-side collect —
   * the only scalars, node count and degree, stay in broadcast subtrees).
   * The edge list and the degree table are materialized ONCE
-  * (`localCheckpoint`, the [[Dedup.duplicateGroups]] pattern) before the
+  * (`pin()`, the [[Dedup.duplicateGroups]] pattern) before the
   * loop: a pure foldLeft plan re-plans and RE-EXECUTES the whole edge
   * derivation (orders⋈lineitem → union → distinct here) in every
   * iteration — round 6 measured a 415-node physical plan whose parquet
   * scans appeared 10+ times, 14.9 s at sf0.1, 3× the next-slowest query.
   * Checkpointed inputs turn each iteration into join + agg over cached
   * blocks, and a further lineage cut every few iterations keeps analysis
-  * time flat at high iteration counts (on a cluster, durable `checkpoint`
-  * plays the same role).
+  * time flat at high iteration counts (under `spark.graft.materialize=disk`
+  * a durable `checkpoint` plays the same role).
   */
 object Graph {
-
-  /** Materialization barrier for the iterative loops. Default
-    * (`spark.graft.materialize` unset or `local`): eager
-    * `localCheckpoint(true)` — blocks live in the executors' block
-    * managers, the right call on a cluster where the relation is spread
-    * over many JVMs. `spark.graft.materialize = disk`: eager RELIABLE
-    * `checkpoint(true)` — blocks go to `spark.sparkContext`'s checkpoint
-    * dir instead of pinning the block manager, the right call for a
-    * single-JVM local[32] scale sweep where an eager localCheckpoint of a
-    * 55M-edge relation pins every block in ONE heap (SCALEBENCH_r15 OOMed
-    * at pagerank 50× on the default 8 GiB driver and had to fork to 24g;
-    * the disk mode runs the same sweep uninterrupted at 8g). Both modes
-    * truncate lineage identically, so plan shapes and results are
-    * byte-identical — only block placement changes. Requires
-    * `setCheckpointDir` when `disk` is selected.
-    */
-  private[graft] implicit class Pinned(private val df: DataFrame) {
-    def pin(): DataFrame =
-      if (df.sparkSession.conf.getOption("spark.graft.materialize").contains("disk"))
-        df.checkpoint(true)
-      else df.localCheckpoint(true)
-  }
 
   /** Symmetrize + dedupe an edge list (simple undirected graph: both
     * directions present, no self-loops, no multi-edges).
@@ -229,7 +208,7 @@ object Graph {
     // derivation would be re-planned and re-executed per reference
     // (round 7's first audit: a 650-node plan scanning the input tables
     // 3x). Materialize once — the [[pagerank]] / Dedup.duplicateGroups
-    // pattern; on a cluster, durable checkpoint plays the same role.
+    // pattern.
     val e = orientedEdges(edges).pin()
     triangleCountsOriented(e)
   }
@@ -365,8 +344,7 @@ object Graph {
     * degree count plus two semi-joins against the node-sized survivor
     * set (broadcastable on any graph whose node list fits an executor;
     * AQE picks the shuffle form otherwise). The induced edge relation is
-    * re-materialized per round — inherent to subtractive peeling — and
-    * on a cluster durable checkpoint plays the same role.
+    * re-materialized per round — inherent to subtractive peeling.
     *
     * Returns (node, deg): the surviving nodes with their core degrees.
     */

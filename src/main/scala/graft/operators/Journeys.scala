@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
+
 /** Sequence analytics over event streams: what users DO next. The
   * empirical Markov chain over event types is the standard product-
   * analytics artifact (funnel leak detection, next-action prediction
@@ -86,7 +88,7 @@ object Journeys {
         sum(col("o_totalprice").cast("decimal(18,2)")).as("__mon"))
       .withColumn("monetary_r", col("__mon").cast("double"))
       .drop("__mon")
-      .localCheckpoint(true) // consumed by the base row + three rank legs
+      .pin() // consumed by the base row + three rank legs
     val n = broadcast(per.agg(count(lit(1)).as("__n")))
     def belowCounts(mCol: String, chunkWidth: Double): DataFrame = {
       val perValue = per.groupBy(col(mCol).as("__v")).agg(count(lit(1)).as("__c"))
@@ -133,7 +135,7 @@ object Journeys {
   def markovEntropyRate(transitions: DataFrame, iters: Int = 8): DataFrame = {
     val t0 = transitions
       .select(col("from_type"), col("to_type"), col("n").cast("long").as("n"))
-      .localCheckpoint(true) // feeds the stationary loop AND the row entropies
+      .pin() // feeds the stationary loop AND the row entropies
     val pi = markovStationary(t0, iters)
     val rowSum = t0.groupBy(col("from_type")).agg(sum(col("n")).as("__r"))
     val hRow = t0.join(rowSum, Seq("from_type"))
@@ -263,7 +265,7 @@ object Journeys {
       // un-cut 8-round chain hung planning outright) — each cut is a
       // single-row, single-partition job, so the eager truncation costs
       // milliseconds and keeps plan work O(1) per round
-      if (i % 2 == 0 && i < iters) next.localCheckpoint(true) else next
+      if (i % 2 == 0 && i < iters) next.pin() else next
     }
     piRow
       .select(col("__S"), col("__pi"),
@@ -301,7 +303,7 @@ object Journeys {
     // the upstream basket derivation (join + distinct over the fact table)
     val b = baskets.select(col(basketCol).as("bk"), col(itemCol).as("item"))
       .distinct()
-      .localCheckpoint(true)
+      .pin()
     val nB = b.agg(countDistinct(col("bk")).cast("double").as("n_baskets"))
     val singles = b.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
     val pairs = b.select(col("bk"), col("item").as("a"))
@@ -349,7 +351,7 @@ object Journeys {
     val weekly = events
       .select(col(keyCol).as("k"), date_trunc("WEEK", col(tsCol)).as("wk"))
       .distinct()
-    val mat = weekly.localCheckpoint(true) // cohort derivation + activity join
+    val mat = weekly.pin() // cohort derivation + activity join
     val cohort = mat.groupBy(col("k")).agg(min(col("wk")).as("cohort"))
     val cells = mat
       .join(cohort, Seq("k"))
@@ -609,7 +611,7 @@ object Journeys {
       .withColumn("sess_id", sum(col("new_sess")).over(cum))
       .groupBy(col(keyCol), col("sess_id"))
       .agg(min(col(tsCol)).as("st"), (max(col(tsCol)) + lit(gapUs)).as("en"))
-      .localCheckpoint(true)
+      .pin()
     val deltas = sess.select(col("st").as("t"), lit(1L).as("d"))
       .unionAll(sess.select(col("en").as("t"), lit(-1L).as("d")))
       .groupBy(col("t")).agg(sum(col("d")).as("d"))
@@ -662,7 +664,7 @@ object Journeys {
     val daily = events
       .select(to_date(col(tsCol)).as("day"), col(keyCol).as("u"))
       .distinct()
-      .localCheckpoint(true)
+      .pin()
     val dau = daily.groupBy(col("day")).agg(countDistinct(col("u")).as("dau"))
     val maxDay = daily.agg(max(col("day")).as("__max_day"))
     val wau = daily
@@ -743,7 +745,7 @@ object Journeys {
         when(col("prev_us").isNull || col(tsCol) - col("prev_us") > gapUs, 1).otherwise(0))
       .withColumn("sess_id", sum(col("new_sess")).over(cum))
       .select(col(keyCol).as("k"), col("sess_id"), col(typeCol).as("et"), col(tsCol).as("ts"))
-      .localCheckpoint(true)
+      .pin()
     // frontier: sessions still in the funnel, with the ts of their last
     // converted stage; stage i+1 = min ts of its event type AFTER that.
     // Each frontier is session-sized and referenced twice (next stage +
@@ -752,7 +754,7 @@ object Journeys {
       .where(col("et") === stages.head)
       .groupBy(col("k"), col("sess_id"))
       .agg(min(col("ts")).as("stage_ts"))
-      .localCheckpoint(true)
+      .pin()
     val frontiers = stages.tail.scanLeft(frontier0) { (front, stage) =>
       sess
         .where(col("et") === stage)
@@ -760,7 +762,7 @@ object Journeys {
         .where(col("ts") > col("stage_ts"))
         .groupBy(col("k"), col("sess_id"))
         .agg(min(col("ts")).as("stage_ts"))
-        .localCheckpoint(true)
+        .pin()
     }
     import spark.implicits._
     stages.zip(frontiers).zipWithIndex

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
+
 /** Data-layout operators: multi-dimensional clustering keys for write-time
   * file organization. A 100 TB table queried on several independent
   * columns can't be range-sorted to serve all of them; interleaving the
@@ -39,18 +41,6 @@ object Layout {
     */
   def quantize(c: Column, width: Double, bits: Int): Column =
     least(floor(c / width).cast("long"), lit((1L << bits) - 1))
-
-  /** Cluster a table for writing: range-partition on the Z-key (so each
-    * output file owns a compact Z-range = a compact hyper-rectangle soup in
-    * the original dimensions) and sort inside each partition (so row
-    * groups within a file prune too). This is the write path; the read
-    * path is ordinary predicate pushdown against the laid-out files.
-    */
-  def clusterByZorder(df: DataFrame, zkey: Column, numFiles: Int): DataFrame =
-    df.withColumn("__z", zkey)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
 
   /** Small-file compaction planner: given a FILE-METADATA relation
     * (partition, path, bytes), assign each under-target file to a
@@ -285,7 +275,7 @@ object Layout {
       .withColumn("__lrn",
         row_number().over(
           Window.partitionBy(col("__pid")).orderBy(sortCols: _*)).cast("long"))
-      .localCheckpoint(true)
+      .pin()
     val offs = local
       .groupBy(col("__pid")).agg(count(lit(1)).as("__c"))
       .withColumn("__off", coalesce(

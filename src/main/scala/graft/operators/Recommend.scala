@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
 import graft.functions.Portable
 
 /** Collaborative-filtering primitives over relational interaction data —
@@ -60,13 +61,13 @@ object Recommend {
       .select(col(userCol).as("__u"), col(itemCol).as("__i"),
         col(ratingCol).cast("long").as("__r"))
       .where(col("__u").isNotNull && col("__i").isNotNull && col("__r").isNotNull)
-      .localCheckpoint(true)
+      .pin()
     val nUsers = r.groupBy(col("__i")).agg(countDistinct(col("__u")).as("n_users"))
     val vInit = r.select(col("__i").as("__k")).distinct()
       .withColumn("__f6", lit(1000000L))
     val vFinal = (1 to iters).foldLeft(vInit) { (v, _) =>
-      val u = alsHalfStep(r, "__u", v, "__i").localCheckpoint(true)
-      alsHalfStep(r, "__i", u, "__u").localCheckpoint(true)
+      val u = alsHalfStep(r, "__u", v, "__i").pin()
+      alsHalfStep(r, "__i", u, "__u").pin()
     }
     vFinal
       .join(nUsers, col("__k") === col("__i"))
@@ -131,7 +132,7 @@ object Recommend {
     // skip the redundant dedup shuffle and second materialization.
     val obRaw = lineitem
       .select(col("l_orderkey").as("__ok"), col("l_partkey").as("__it"))
-    val ob = if (assumeDistinct) obRaw else obRaw.distinct().localCheckpoint(true)
+    val ob = if (assumeDistinct) obRaw else obRaw.distinct().pin()
     val ni = ob.groupBy(col("__it")).agg(count(lit(1)).as("__n"))
     // r21 (guide §2, the Spread repair): the within-basket pair expansion +
     // partial-agg count is the query's dominant stage (profiled 5.9 s of
@@ -209,13 +210,13 @@ object Recommend {
       .agg(count(lit(1)).as("__no"), max(struct(col("dt"), col("ok"))).as("__last"))
       .where(col("__no") >= 2)
       .select(col("cust"), col("__last.ok").as("last_ok"))
-      .localCheckpoint(true)
+      .pin()
     val li = lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("it")).distinct()
     val tagged = li
       .join(uo.select(col("cust"), col("ok")), Seq("ok"))
       .join(lastPer, Seq("cust"))
-      .localCheckpoint(true)
+      .pin()
     // r20: the held-out and train (cust, it) relations formerly deduped
     // in two separate shuffles over the same checkpointed input; ONE
     // groupBy(cust, it) now carries both membership flags and each side
@@ -229,11 +230,11 @@ object Recommend {
       .agg(
         max((col("ok") === col("last_ok")).cast("int")).as("__held"),
         max((col("ok") =!= col("last_ok")).cast("int")).as("__train"))
-      .localCheckpoint(true)
+      .pin()
     val held = custItems.where(col("__held") === 1).select(col("cust"), col("it"))
     val trainLi = tagged.where(col("ok") =!= col("last_ok"))
       .select(col("ok").as("l_orderkey"), col("it").as("l_partkey"))
-      .localCheckpoint(true)
+      .pin()
     val userItems = custItems.where(col("__train") === 1).select(col("cust"), col("it"))
     val sims = itemItemCosine(trainLi, minCo, simK, assumeDistinct = true)
       .select(col("item").as("it"), col("neighbor"), col("cos_r"))

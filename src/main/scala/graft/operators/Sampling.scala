@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
+
 /** Deterministic, reproducible sampling for training-data pipelines.
   *
   * `df.sample()` draws from a per-partition RNG: the selected rows change
@@ -544,7 +546,7 @@ object Sampling {
       explode(Tokenize.tokenArray(col(textCol))).as("__w"))
     val cdw = toks.groupBy(col("__d"), col("__w"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .pin()
     val cw = cdw.groupBy(col("__w")).agg(sum(col("__c")).as("__cw"))
     val td = cdw.groupBy(col("__d")).agg(sum(col("__c")).as("__totd"))
     val vt = cw.agg(count(lit(1)).as("__vs"), sum(col("__cw")).as("__tot"))

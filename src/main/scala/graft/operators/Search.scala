@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
+
 /** Query-side of the inverted index: the reference only BUILDS the index
   * (reference src/main.cpp — no query path exists); any consumer's next step
   * is boolean retrieval over it. These operators run on the postings
@@ -141,11 +143,11 @@ object Search {
       facets: Seq[String],
       idCol: String = "doc_id"): DataFrame = {
     require(facets.nonEmpty, "facetCounts needs at least one facet column")
-    val hits = andQuery(postings, words).localCheckpoint(true)
+    val hits = andQuery(postings, words).pin()
     val slice = meta
       .join(broadcast(hits), Seq(idCol))
       .select(facets.map(col): _*)
-      .localCheckpoint(true)
+      .pin()
     facets.map { f =>
       slice
         .groupBy(col(f))
@@ -334,12 +336,12 @@ object Search {
     val allTerms = queries.flatMap { case (_, ws) => cleanedTerms(ws) }.distinct
     val docLens = tokens
       .groupBy(col(idCol)).agg(count(lit(1)).as("dl"))
-      .localCheckpoint(true)
+      .pin()
     val tf = tokens
       .where(col("word").isin(allTerms: _*))
       .groupBy(col(idCol), col("word"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .pin()
     (docLens, tf)
   }
 
@@ -761,7 +763,7 @@ object Search {
     require(fbDocs > 0 && expandTerms > 0 && k > 0, "fbDocs, expandTerms, k must be positive")
     import graft.functions.Portable
     val terms   = cleanedTerms(words)
-    val docLens = tokens.groupBy(col(idCol)).agg(count(lit(1)).as("dl")).localCheckpoint(true)
+    val docLens = tokens.groupBy(col(idCol)).agg(count(lit(1)).as("dl")).pin()
     val stats   = docLens.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
     // 1. pseudo-relevant docs: bounded top-fb cut on the ROUNDED base
     //    score — bm25 inlined on the SHARED docLens sidecar
@@ -785,7 +787,7 @@ object Search {
       .orderBy(col("s").desc, col(idCol).asc)
       .limit(fbDocs)
       .select(col(idCol))
-      .localCheckpoint(true)
+      .pin()
     // 2. expansion terms: feedback-set tf × corpus idf, originals excluded
     val fbTf = tokens
       .join(broadcast(fb), Seq(idCol))
@@ -804,7 +806,7 @@ object Search {
       .orderBy(col("w").desc, col("word").asc)
       .limit(expandTerms)
       .select(col("word"))
-      .localCheckpoint(true)
+      .pin()
     // 3. rescore with original ∪ expansion terms as a broadcast relation —
     //    arithmetic identical to bm25Query
     val spark = tokens.sparkSession
@@ -1034,9 +1036,9 @@ object Search {
       .join(dfT, Seq("word"))
       .crossJoin(broadcast(nDocs))
       .withColumn("wgt", col("tf") * log(col("n_docs").cast("double") / col("df_t")))
-      .localCheckpoint(true)
+      .pin()
     val norms = w.groupBy(col(idCol)).agg(sqrt(sum(col("wgt") * col("wgt"))).as("nrm"))
-      .localCheckpoint(true)
+      .pin()
     val qv = w.where(col(idCol) === queryId).select(col("word"), col("wgt").as("q_wgt"))
     val qn = norms.where(col(idCol) === queryId).select(col("nrm").as("q_nrm"))
     w.where(col(idCol) =!= queryId)

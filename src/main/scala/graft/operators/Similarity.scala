@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
+
 /** Similarity search over an embedding column (`Array[Float]`).
   *
   * Scale design (100 TB):
@@ -272,7 +274,7 @@ object Similarity {
           .withColumn("tbl", lit(tbl))
       }
       .reduce(_ unionAll _)
-      .localCheckpoint(true)
+      .pin()
     // bucket-size guard: the count aggregate is tiny (one row per bucket)
     // and the semi-join prunes saturated-ORIGIN vectors off both sides
     // before any pair materializes. With probing, singleton buckets stay
@@ -500,7 +502,7 @@ object Similarity {
     import spark.implicits._
     val data = corpus
       .select(col(idCol).cast("long").as("__id"), col(vecCol).cast("array<double>").as("__v"))
-      .localCheckpoint(true)
+      .pin()
     val seed = data.orderBy(col("__id")).limit(1).collect()(0)
     // (id, entered_round, vector): ≤ 1 + rounds·cap rows of driver state —
     // the power-iteration d-sized discipline
@@ -551,12 +553,12 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(iters >= 1, s"iters ($iters) must be >= 1")
-    val data = corpus.select(col(idCol), col(vecCol)).localCheckpoint(true)
-    var step = lloydStep(data, init, idCol, vecCol).localCheckpoint(true)
+    val data = corpus.select(col(idCol), col(vecCol)).pin()
+    var step = lloydStep(data, init, idCol, vecCol).pin()
     (2 to iters).foreach { _ =>
       step = lloydStep(
         data, step.select(col("cell").as(idCol), col("centroid").as(vecCol)),
-        idCol, vecCol).localCheckpoint(true)
+        idCol, vecCol).pin()
     }
     step.select(
       col("cell"),
@@ -583,8 +585,8 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(maxIters >= 1, s"maxIters ($maxIters) must be >= 1")
-    val data = corpus.select(col(idCol), col(vecCol)).localCheckpoint(true)
-    var cur = lloydStep(data, init, idCol, vecCol).localCheckpoint(true)
+    val data = corpus.select(col(idCol), col(vecCol)).pin()
+    var cur = lloydStep(data, init, idCol, vecCol).pin()
     var converged = false
     var round = 1
     while (!converged && round < maxIters) {
@@ -600,7 +602,7 @@ object Similarity {
               col("__prev") =!= col("centroid"), 1)).as("moved"))
         .where(col("centroid").isNotNull) // drop rows for cells that emptied
         .select(col("cell"), col("n_members"), col("centroid"))
-      val next = observed.localCheckpoint(true)
+      val next = observed.pin()
       converged = observed.queryExecution.observedMetrics
         .get(metricName).forall(_.getLong(0) == 0L)
       cur = next
@@ -923,7 +925,7 @@ object Similarity {
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
     val data = emb
       .select(transform(col(vecCol), x => x.cast("double")).as("x"))
-      .localCheckpoint(true)
+      .pin()
     val d = data.select(size(col("x"))).first().getInt(0)
     val (v, lambda) = powerRounds(data, d, rounds, salt)
     val spark = emb.sparkSession
@@ -985,7 +987,7 @@ object Similarity {
     require(components >= 1 && rounds >= 1, s"components/rounds must be >= 1")
     var data = emb
       .select(transform(col(vecCol), x => x.cast("double")).as("x"))
-      .localCheckpoint(true)
+      .pin()
     val d = data.select(size(col("x"))).first().getInt(0)
     val total = data
       .select(dot(col("x"), col("x")).as("sq"))
@@ -997,7 +999,7 @@ object Similarity {
         data = data
           .withColumn("__d", dot(col("x"), vLit))
           .select(transform(col("x"), (e, i) => e - col("__d") * element_at(vLit, i + 1)).as("x"))
-          .localCheckpoint(true)
+          .pin()
       }
       (c, d, rounds,
         math.floor(lambda * 1e4 + 0.5) / 1e4,
@@ -1105,7 +1107,7 @@ object Similarity {
     require(dims.nonEmpty && k > 0, "need prefix dims and k > 0")
     val truth = bruteForceTopK(corpus, queries, k, idCol, vecCol)
       .select(col("q_id"), col(idCol))
-      .localCheckpoint(true)
+      .pin()
     val nq = broadcast(queries.agg(count(lit(1)).as("n_queries")))
     dims.map { d =>
       def tr(df: DataFrame) = df.select(col(idCol), slice(col(vecCol), 1, d).as(vecCol))
@@ -1331,7 +1333,7 @@ object Similarity {
       .select(col(idCol), col(vecCol))
       .withColumn("nrm", norm(vecCol))
       .join(ivfAssign(corpus, centroids, idCol, vecCol).select(col(idCol), col("cell")), Seq(idCol))
-      .localCheckpoint(true)
+      .pin()
     val keep = member
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("__cn"))
@@ -1380,7 +1382,7 @@ object Similarity {
       .join(assignment.select(col(idCol), col("cell")), Seq(idCol))
       .groupBy(col("cell"), col("word"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .pin()
     val cdf = tf.groupBy(col("word")).agg(count(lit(1)).as("cw"))
     val nCells = broadcast(tf.select(col("cell")).distinct()
       .agg(count(lit(1)).as("n_cells")))
@@ -1422,7 +1424,7 @@ object Similarity {
       .select(col(idCol), col(vecCol))
       .withColumn("nrm", norm(vecCol))
       .join(ivfAssign(corpus, centroids, idCol, vecCol).select(col(idCol), col("cell")), Seq(idCol))
-      .localCheckpoint(true)
+      .pin()
     val keep = member
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("__cn"))
@@ -1490,13 +1492,13 @@ object Similarity {
       .select(col(idCol), col("ev"), col("en"), col("rel_r"))
       .orderBy(col("rel_r").desc, col(idCol).asc)
       .limit(n)
-      .localCheckpoint(true)
+      .pin()
     val pairs = cand.select(col(idCol).as("a"), col("ev").as("va"), col("en").as("na"))
       .crossJoin(cand.select(col(idCol).as("b"), col("ev").as("vb"), col("en").as("nb")))
       .where(col("a") =!= col("b"))
       .select(col("a"), col("b"),
         round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6).as("sim_r"))
-      .localCheckpoint(true)
+      .pin()
     val rels = cand.select(col(idCol), col("rel_r"))
 
     // ids are read GENERICALLY (Row.get, re-entering the plan as isin
@@ -1729,7 +1731,7 @@ object Similarity {
     // — materialize once or the whole corpus grid re-runs per reference
     val scat = silhouetteSimplified(corpus, centroids, idCol, vecCol)
       .select(col("cell"), col("n"), col("a_mean_r"))
-      .localCheckpoint(true)
+      .pin()
     val c = centroids
       .select(col(idCol).as("c_id"), col(vecCol).as("cv"))
       .withColumn("cn", norm("cv"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
 import graft.functions.Portable
 
 /** Catalog-style corpus/table statistics: the ANALYZE pass a query
@@ -436,7 +437,7 @@ object Stats {
       .groupBy(col(groupCol).as("g"))
       .agg(expr(s"kmv_ndv($keyCol, $k)").as("r"))
       .select(col("g"), col("r.ndv_est").as("nd"), col("r.sample").as("s"))
-      .localCheckpoint(true) // one row per source
+      .pin() // one row per source
     val pairs = sk.select(col("g").as("g1"), col("s").as("s1"))
       .crossJoin(sk.select(col("g").as("g2"), col("s").as("s2")))
       .where(col("g1") < col("g2"))
@@ -835,7 +836,7 @@ object Stats {
       .withColumn("gap_r", Portable.pround(abs(col("conf_r") - col("acc_r")), 4))
       // materialized once (≤ bins rows): both the output and the ECE
       // total consume it, and lazy reuse would re-run the corpus scan
-      .localCheckpoint(true)
+      .pin()
     // the scalar total joins back broadcast rather than through an
     // all-rows-to-one-partition window
     val tot = agg.agg(Portable.pround(
@@ -935,7 +936,7 @@ object Stats {
       .agg(count(lit(1)).as("n"),
         Portable.pround(avg(col(confCol)), 4).as("conf_r"),
         Portable.pround(avg(col(labelCol)), 4).as("acc_r"))
-      .localCheckpoint(true)
+      .pin()
     val obar = agg.agg(Portable.pround(
       sum(col("n").cast("double") * col("acc_r")) / sum(col("n").cast("double")), 6).as("obar_r"))
     agg
@@ -997,7 +998,7 @@ object Stats {
     val pre = b
       .withColumn("__tn", sum(col("n")).over(w))
       .withColumn("__tc", sum(col("__c")).over(w))
-      .localCheckpoint(true)
+      .pin()
     val ranges = pre
       .select(col("bin").as("__j"),
         (col("__tn") - col("n")).as("__nj"), (col("__tc") - col("__c")).as("__cj"))
@@ -1057,7 +1058,7 @@ object Stats {
       .withColumn("__p6",
         floor(col("k").cast("double") / col("n").cast("double") * 1e6 + lit(0.5))
           .cast("long"))
-      .localCheckpoint(true)
+      .pin()
     val mom = cells.agg(
       count(lit(1)).as("__gn"),
       sum(col("__p6")).as("__s1"),
@@ -1146,7 +1147,7 @@ object Stats {
             + (col("__cn") - col("__ck")).cast("double") * c0, 6).as("__llr"))
       // hour-domain rows; materialized once for the crossing scan + the
       // final-look readout
-      .localCheckpoint(true)
+      .pin()
     val cross = looks
       .where(col("__llr") >= bndA || col("__llr") <= bndB)
       .orderBy(col("__h"))
@@ -1213,7 +1214,7 @@ object Stats {
         sum(col("__t").cast("long")).as("__nt"),
         sum(when(col("__t"), col("__x")).otherwise(0L).cast("decimal(38,0)")).as("__st"),
         sum(when(!col("__t"), col("__x")).otherwise(0L).cast("decimal(38,0)")).as("__sc"))
-      .localCheckpoint(true)
+      .pin()
       .withColumn("__nc", col("__n") - col("__nt"))
       // the 1e6-scaled long is computed DIRECTLY (floor(x·1e6 + ½)) —
       // pround(x,6)·1e6 would round-trip k/1e6·1e6 through two IEEE
@@ -1682,7 +1683,7 @@ object Stats {
       .where(col("__v").isNotNull && col("__v") > 0)
       .orderBy(col("__v").desc, col("__t").asc)
       .limit(k + 1)
-      .localCheckpoint(true) // consumed by the boundary min AND the log sum
+      .pin() // consumed by the boundary min AND the log sum
     val xk1 = broadcast(top.agg(min(col("__v")).as("xk1")))
     top.crossJoin(xk1)
       .agg(first(col("xk1")).as("xk1"),
@@ -1739,7 +1740,7 @@ object Stats {
         expr(s"($buckets * (__n - __cumIncl)) DIV __n") + 1)
       .groupBy(col("decile"))
       .agg(sum(col("__c")).as("n"), sum(col("__p")).as("n_pos"))
-      .localCheckpoint(true) // ≤ buckets rows; feeds base + cumulative legs
+      .pin() // ≤ buckets rows; feeds base + cumulative legs
     val cums = perBucket.select(col("decile").as("__d2"),
         col("n").as("__n2"), col("n_pos").as("__p2"))
     perBucket
@@ -1797,7 +1798,7 @@ object Stats {
     val cats = rows.select(col("__c")).distinct()
       .withColumn("__idx",
         row_number().over(Window.orderBy(col("__c"))) - 1)
-      .localCheckpoint(true)
+      .pin()
     val kTot = broadcast(cats.agg(count(lit(1)).as("__k"))
       .crossJoin(rows.agg(count(lit(1)).as("__n"))))
     val keep = graft.functions.HexSlice.u(md5(concat(lit(s"$salt:"), col("__id").cast("string"))), 1, 13).cast("double") / lit(4503599627370496.0) < lit(p)
@@ -1878,7 +1879,7 @@ object Stats {
       .select(substring(cents.cast("string"), 1, 1).cast("int").as("digit"))
       .groupBy(col("digit"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .pin()
     val tot = broadcast(digits.agg(sum(col("n")).as("t")))
     val expected = (1 to 9).map(d => math.log10(1.0 + 1.0 / d))
     val expArr = array(expected.map(lit): _*)
@@ -1889,7 +1890,7 @@ object Stats {
       .withColumn("__term", Portable.pround(
         (col("share_r") - col("expected_r")) * (col("share_r") - col("expected_r"))
           / col("expected_r") * col("t"), 6))
-      .localCheckpoint(true)
+      .pin()
     val chi2 = broadcast(terms.agg(Portable.pround(sum(col("__term")), 4).as("chi2_r")))
     terms.crossJoin(chi2)
       .select(col("digit"), col("n"), col("share_r"), col("expected_r"), col("chi2_r"))
@@ -1944,7 +1945,7 @@ object Stats {
     */
   def inclusionCheck(a: DataFrame, aCol: String, b: DataFrame, bCol: String): DataFrame = {
     val av = a.select(col(aCol).as("__v")).where(col("__v").isNotNull).distinct()
-      .localCheckpoint(true)
+      .pin()
     val bv = b.select(col(bCol).as("__v")).where(col("__v").isNotNull).distinct()
     val orphans = av.join(bv, Seq("__v"), "left_anti")
       .agg(count(lit(1)).as("n_orphans"))
@@ -1985,14 +1986,14 @@ object Stats {
         size(filter(transform(col("__bs"), b => Portable.pround(b, 6)), b => b <= col("__v"))))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .pin()
     val spark = ref.sparkSession
     import spark.implicits._
     val joined = (0 until bins).toDF("bin")
       .join(binned(ref).withColumnRenamed("n", "n_ref"), Seq("bin"), "left_outer")
       .join(binned(cur).withColumnRenamed("n", "n_cur"), Seq("bin"), "left_outer")
       .na.fill(0L, Seq("n_ref", "n_cur"))
-      .localCheckpoint(true)
+      .pin()
     val tot = broadcast(joined.agg(sum(col("n_ref")).as("tr"), sum(col("n_cur")).as("tc")))
     val terms = joined
       .crossJoin(tot)
@@ -2001,7 +2002,7 @@ object Stats {
       .withColumn("term_r", Portable.pround(
         (col("p_cur") - col("p_ref")) * log(col("p_cur") / col("p_ref")), 6))
       .select(col("bin"), col("n_ref"), col("n_cur"), col("term_r"))
-      .localCheckpoint(true)
+      .pin()
     val psiTot = broadcast(terms.agg(Portable.pround(sum(col("term_r")), 6).as("psi_r")))
     terms.crossJoin(psiTot)
   }
@@ -2142,7 +2143,7 @@ object Stats {
         ((col("s2").cast("double")
           - col("s1").cast("double") * col("s1").cast("double") / col("n"))
           / (col("n") - 1)).as("v"))
-      .localCheckpoint(true)
+      .pin()
     val a = g.select(col("g").as("g1"), col("n").as("n1"), col("m").as("m1"), col("v").as("v1"))
     val b = g.select(col("g").as("g2"), col("n").as("n2"), col("m").as("m2"), col("v").as("v2"))
     val se1 = col("v1") / col("n1")
@@ -2179,7 +2180,7 @@ object Stats {
     val counts = tokens
       .groupBy(col(groupCol).as("g"), col(wordCol).as("w"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .pin()
     val totals = counts.groupBy(col("g"))
       .agg(sum(col("c")).as("t"), count(lit(1)).as("n_types"))
     counts
@@ -2214,12 +2215,12 @@ object Stats {
       .agg(count(lit(1)).as("c"))
       // vocab×groups-sized; totals AND the probability join consume it —
       // materialize so the corpus tokenization scan runs once
-      .localCheckpoint(true)
+      .pin()
     val totals = counts.groupBy(col("g")).agg(sum(col("c")).as("t"))
     val wc = counts
       .join(broadcast(totals), Seq("g"))
       .select(col("g"), col("w"), (col("c").cast("double") / col("t")).as("p"))
-      .localCheckpoint(true)
+      .pin()
     val a = wc.select(col("g").as("g1"), col("w"), col("p"))
     val b = wc.select(col("g").as("g2"), col("w"), col("p").as("q"))
     val ln2 = math.log(2.0)
@@ -2587,7 +2588,7 @@ object Stats {
     // checkpoint isn't pinned to a narrow bench scan (identity at scale).
     val rows = graft.functions.Spread
       .fan(df.where(col(catCol).isNotNull && col(valueCol).isNotNull))
-      .localCheckpoint(true)
+      .pin()
     val perCat = rows
       .groupBy(col(catCol).as("__cat"))
       .agg(count(lit(1)).as("__n"),

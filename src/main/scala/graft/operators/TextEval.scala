@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
 import graft.functions.Portable
 
 /** Text-generation overlap metrics — BLEU and ROUGE, the n-gram
@@ -84,7 +85,7 @@ object TextEval {
       col(idCol).as("__id"),
       Tokenize.tokenArray(col(candCol)).as("__ct"),
       Tokenize.tokenArray(col(refCol)).as("__rt"))
-      .localCheckpoint(true)
+      .pin()
     val cg = gramCounts(toks.select(col("__id"), col("__ct").as("__t")), "__id", "__t", maxN)
     val rg = gramCounts(toks.select(col("__id"), col("__rt").as("__t")), "__id", "__t", maxN)
     // clipped matches: inner join suffices — a candidate gram absent from
@@ -148,7 +149,7 @@ object TextEval {
       col(idCol).as("__id"),
       Tokenize.tokenArray(col(candCol)).as("__ct"),
       Tokenize.tokenArray(col(refCol)).as("__rt"))
-      .localCheckpoint(true)
+      .pin()
     val cg = gramCounts(toks.select(col("__id"), col("__ct").as("__t")), "__id", "__t", 2)
     val rg = gramCounts(toks.select(col("__id"), col("__rt").as("__t")), "__id", "__t", 2)
     val matched = cg

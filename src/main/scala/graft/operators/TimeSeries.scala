@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Materialize.Pinned
+
 /** Time-series regularization: resample irregular event streams onto a
   * fixed grid and fill the gaps — the feature-engineering step every
   * metrics/telemetry/training-signal pipeline runs before a model sees
@@ -535,7 +537,7 @@ object TimeSeries {
       events: DataFrame,
       keyCol: String = "event_type",
       tsCol: String = "ts_t"): DataFrame = {
-    val ser = denseHourlySeries(events, keyCol, tsCol).localCheckpoint(true)
+    val ser = denseHourlySeries(events, keyCol, tsCol).pin()
     val cp = cusumFromSeries(ser, keyCol).select(col(keyCol), col("cp_hour"))
     val pre = col("__h") <= col("cp_hour")
     val st = ser

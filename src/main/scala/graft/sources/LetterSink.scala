@@ -212,27 +212,4 @@ object LetterSink {
       .mode("overwrite")
       .partitionBy("letter")
       .text(outDir)
-
-  /** Distributed twin of [[mergeExact]] (r13 task 6): the same
-    * immutable-snapshot merge — read the existing `a.txt`…`z.txt`
-    * snapshot through the DSv2 reader, array-union the delta per word,
-    * write a NEW snapshot — but through [[writePartitioned]]'s parallel
-    * letter-partitioned sink instead of the driver-side exact files.
-    * The input dir is never touched, so readers of the old snapshot keep
-    * a consistent view while the merge runs; at 100 TB this is the shape
-    * an index roll actually takes (distributed read → one word-keyed
-    * full-outer join shuffle → distributed partitioned write; nothing
-    * index-sized ever visits the driver). Per-letter content is pinned
-    * byte-equal by LetterSinkSpec to the model's merged index on the
-    * hand-built corpus, and to [[mergeExact]] on both golden corpora.
-    */
-  def mergePartitioned(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String,
-      delta: DataFrame,
-      outDir: String): Unit = {
-    val existing = spark.read.format("graft-letters").load(indexDir)
-      .select(col("word"), col("doc_ids"))
-    writePartitioned(graft.operators.InvertedIndex.mergeIndexes(existing, delta), outDir)
-  }
 }

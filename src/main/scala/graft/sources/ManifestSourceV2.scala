@@ -42,9 +42,8 @@ import graft.plans.CleanToken
   * inside the scan.
   *
   * Size-greedy bin packing bounds task count: files are assigned to at most
-  * `maxPartitions` (option, default 32) bins by descending size, largest
-  * bin first — the classic LPT heuristic, so one huge document doesn't
-  * serialize the whole scan behind it.
+  * 32 bins by descending size, largest bin first — the classic LPT
+  * heuristic, so one huge document doesn't serialize the whole scan behind it.
   */
 class ManifestDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-manifest"
@@ -58,9 +57,7 @@ class ManifestDataSource extends TableProvider with DataSourceRegister {
       properties: util.Map[String, String]): Table = {
     val path = Option(properties.get("path")).getOrElse(
       throw new IllegalArgumentException("graft-manifest requires a manifest path (.load(path))"))
-    val maxParts = Option(properties.get("maxPartitions")).map(_.toInt).getOrElse(32)
-    val baseDir  = Option(properties.get("baseDir"))
-    new ManifestTable(path, maxParts, baseDir)
+    new ManifestTable(path, Option(properties.get("baseDir")))
   }
 }
 
@@ -111,17 +108,17 @@ object ManifestDataSource {
   }
 }
 
-class ManifestTable(manifestPath: String, maxPartitions: Int, baseDir: Option[String]) extends Table with SupportsRead {
+class ManifestTable(manifestPath: String, baseDir: Option[String]) extends Table with SupportsRead {
   override def name(): String = s"graft-manifest(`$manifestPath`)"
   override def schema(): StructType = ManifestDataSource.Schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ManifestScanBuilder(manifestPath, maxPartitions, baseDir)
+    new ManifestScanBuilder(manifestPath, baseDir)
 }
 
-class ManifestScanBuilder(manifestPath: String, maxPartitions: Int, baseDir: Option[String])
+class ManifestScanBuilder(manifestPath: String, baseDir: Option[String])
   extends ScanBuilder with SupportsPushDownRequiredColumns {
 
   private var required: StructType = ManifestDataSource.Schema
@@ -129,12 +126,12 @@ class ManifestScanBuilder(manifestPath: String, maxPartitions: Int, baseDir: Opt
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = new ManifestScan(manifestPath, maxPartitions, baseDir, required)
+  override def build(): Scan = new ManifestScan(manifestPath, baseDir, required)
 }
 
 case class ManifestInputPartition(files: Seq[(Long, String)]) extends InputPartition
 
-class ManifestScan(manifestPath: String, maxPartitions: Int, baseDir: Option[String], required: StructType)
+class ManifestScan(manifestPath: String, baseDir: Option[String], required: StructType)
   extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -144,7 +141,7 @@ class ManifestScan(manifestPath: String, maxPartitions: Int, baseDir: Option[Str
 
   override def planInputPartitions(): Array[InputPartition] = {
     val files = ManifestDataSource.parseManifest(manifestPath, baseDir)
-    ManifestDataSource.packBins(files, maxPartitions).map(ManifestInputPartition(_): InputPartition).toArray
+    ManifestDataSource.packBins(files, 32).map(ManifestInputPartition(_): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

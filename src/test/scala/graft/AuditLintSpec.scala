@@ -227,14 +227,18 @@ class AuditLintSpec extends SparkSpec {
     }.toSeq
   }
 
-  test("cap lint: every public cap-taking operator offers the observe() drop audit") {
+  /** Every engine source file (`src/main/scala/graft`) with its text. */
+  private def engineSources: Seq[(java.io.File, String)] = {
     val opDir = new java.io.File("src/main/scala/graft")
     assert(opDir.isDirectory, s"source dir not found from ${sys.props("user.dir")}")
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles.toSeq.flatMap(scalaFiles)
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val offenders = scalaFiles(opDir).flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    scalaFiles(opDir).map(f => f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  test("cap lint: every public cap-taking operator offers the observe() drop audit") {
+    val offenders = engineSources.flatMap { case (f, src) =>
       capDefsWithoutAudit(src).map(n => s"${f.getName}:$n")
     }
     assert(offenders.isEmpty,
@@ -255,6 +259,57 @@ class AuditLintSpec extends SparkSpec {
         |}""".stripMargin
     assert(capDefsWithoutAudit(seeded) == Seq("hotPairs"),
       s"detector must flag exactly the public unaudited def: ${capDefsWithoutAudit(seeded)}")
+  }
+
+  // ----------------------------------------------------- materialization
+
+  /** The code lines of `src` that checkpoint a relation themselves instead
+    * of going through `graft.functions.Materialize`'s `pin()`; comments
+    * are skipped.
+    */
+  private def rawCheckpoints(src: String): Seq[String] =
+    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+      .linesIterator.map(_.trim)
+      .filter(l => l.contains("localCheckpoint(") || l.contains(".checkpoint("))
+      .toSeq
+
+  test("materialization lint: only Materialize checkpoints, every other site calls pin()") {
+    val offenders = engineSources.collect {
+      case (f, src) if f.getName != "Materialize.scala" => rawCheckpoints(src).map(l => s"${f.getName}: $l")
+    }.flatten
+    assert(offenders.isEmpty,
+      s"checkpoints that bypass the one materialization policy (use .pin() from " +
+        s"graft.functions.Materialize): ${offenders.mkString("\n", "\n", "")}")
+  }
+
+  test("the materialization lint flags a seeded raw checkpoint and skips comments") {
+    val seeded =
+      """object Bad {
+        |  /** pinned with `localCheckpoint(true)` before the loop */
+        |  def a(df: DataFrame): DataFrame = df.localCheckpoint(true)
+        |  // df.checkpoint(true) would go to disk
+        |  def b(df: DataFrame): DataFrame = df.pin() // not df.localCheckpoint(true)
+        |  def c(df: DataFrame): DataFrame =
+        |    df.distinct().checkpoint(true)
+        |}""".stripMargin
+    assert(rawCheckpoints(seeded) ==
+      Seq("def a(df: DataFrame): DataFrame = df.localCheckpoint(true)", "df.distinct().checkpoint(true)"),
+      s"detector must flag exactly the two code calls: ${rawCheckpoints(seeded)}")
+  }
+
+  test("the audit's plan text does not depend on what the JVM built before") {
+    // q_bigram_lm pins its bigram table and plans lambda functions, so its
+    // raw plan carries expression ids, an RDD id with its call site and
+    // lambda variable ids; q_dedup_paragraph built in between advances
+    // every one of those counters
+    val q = SparkEntry.lookup("q_bigram_lm").head
+    val first = q.build(spark, sfDir)
+    SparkEntry.lookup("q_dedup_paragraph").head.build(spark, sfDir)
+    val second = q.build(spark, sfDir)
+    val raw = Seq(first, second).map(_.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
+    assert(raw(0) != raw(1), "the two builds should differ in their raw counters")
+    assert(ExplainAudit.planText(first) == ExplainAudit.planText(second))
   }
 
   test("the lint flags a seeded violation (vocabulary-wide row_number)") {

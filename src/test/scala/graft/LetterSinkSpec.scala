@@ -96,10 +96,7 @@ class LetterSinkSpec extends SparkSpec {
       val postings = Engine.indexFromManifest(spark, s"$refBase/$manifest", refBase)
       val baseDir = Files.createTempDirectory(s"graft-merge-base-$tag").toString
       LetterSink.writeExact(postings, baseDir)
-      val baseSnapshot = ('a' to 'z').map { ch =>
-        ch -> new String(
-          Files.readAllBytes(java.nio.file.Paths.get(baseDir, s"$ch.txt")), "UTF-8")
-      }.toMap
+      val baseSnapshot = letterFiles(baseDir)
       // delta: a small synthetic batch with one overlapping and one new word
       import spark.implicits._
       val delta = InvertedIndex.postings(
@@ -108,24 +105,24 @@ class LetterSinkSpec extends SparkSpec {
             .toDF("doc_id", "text"),
           "text", Seq("doc_id")))
       val exactDir = Files.createTempDirectory(s"graft-merge-exact-$tag").toString
-      val partDir  = Files.createTempDirectory(s"graft-merge-part-$tag").toString
       LetterSink.mergeExact(spark, baseDir, delta, exactDir)
-      LetterSink.mergePartitioned(spark, baseDir, delta, partDir)
-      ('a' to 'z').foreach { ch =>
-        val exact = new String(
-          Files.readAllBytes(java.nio.file.Paths.get(exactDir, s"$ch.txt")), "UTF-8")
-        assert(partBytes(partDir, ch) == exact,
-          s"$tag: letter '$ch' merged distributed bytes != merged exact bytes")
-      }
       // the merge really merged (the delta's words are in the z/q buckets)
-      assert(partBytes(partDir, 'z').contains("zebra:["),
+      assert(letterFiles(exactDir)('z').contains("zebra:["),
         s"$tag: merged snapshot must contain the delta's new word")
-      // snapshot immutability: the input dir's bytes are untouched
-      ('a' to 'z').foreach { ch =>
-        val now = new String(
-          Files.readAllBytes(java.nio.file.Paths.get(baseDir, s"$ch.txt")), "UTF-8")
-        assert(now == baseSnapshot(ch), s"$tag: merge mutated the input snapshot ($ch.txt)")
-      }
+      assertUnchanged(baseDir, baseSnapshot, tag)
+    }
+  }
+
+  private def letterFiles(dir: String): Map[Char, String] =
+    ('a' to 'z').map { ch =>
+      ch -> new String(Files.readAllBytes(java.nio.file.Paths.get(dir, s"$ch.txt")), "UTF-8")
+    }.toMap
+
+  /** Snapshot immutability: a merge leaves its input dir's bytes untouched. */
+  private def assertUnchanged(dir: String, before: Map[Char, String], tag: String): Unit = {
+    val now = letterFiles(dir)
+    ('a' to 'z').foreach { ch =>
+      assert(now(ch) == before(ch), s"$tag: merge mutated the input snapshot ($ch.txt)")
     }
   }
 
@@ -231,15 +228,14 @@ class LetterSinkSpec extends SparkSpec {
   test("mergeExact == the model's merged index, byte for byte, on the hand-built corpus") {
     val base = Files.createTempDirectory("graft-rank-base").toString
     LetterSink.writeExact(rankingPostings, base)
+    val baseSnapshot = letterFiles(base)
     val want = Model.files(Model.merge(Model.postings(rankingDocs), Model.postings(deltaDocs)))
     // the delta reorders a bucket (abc now outranks ab) and fills an empty one (n)
     assert(want('a') == "abc:[1 2 6]\nab:[1 2]\nabcdef:[3]\n")
     assert(want('n') == "nd:[7]\n")
     val out = Files.createTempDirectory("graft-rank-merged").toString
     assertFiles(out, LetterSink.mergeExact(spark, base, deltaPostings, out), want)
-    val part = Files.createTempDirectory("graft-rank-merged-part").toString
-    LetterSink.mergePartitioned(spark, base, deltaPostings, part)
-    assertParts(part, want)
+    assertUnchanged(base, baseSnapshot, "hand-built")
   }
 
   test("writeExact and mergeExact == the plain-Scala model on the byte-adversarial corpus") {

@@ -13,9 +13,8 @@ import graft.sources.LetterSink
   * scan already groups each bin's ids by word. Its second barrier, after
   * which each reducer owns whole letters, becomes the one exchange, by
   * first letter: each reduce task merges its words' lists, ranks its
-  * letters and formats their files
-  * ([[graft.sources.LetterSink.writeExact]]), and the driver writes them —
-  * see SURVEY §3.
+  * letters and writes their files
+  * ([[graft.sources.LetterSink.writeExact]]) — see SURVEY §3.
   */
 object Engine {
 

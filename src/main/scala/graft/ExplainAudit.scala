@@ -25,18 +25,29 @@ object ExplainAudit {
   private val Counter = """(id=#|plan_id=|#|\b[xyz]_|RDD\[|graft_cc_audit_)(\d+)""".r
 
   /** `df`'s formatted plan with each [[Counter]] kind renumbered by first
-    * appearance, lambda classes without addresses and RDD call sites without
-    * source lines: a plan's text does not depend on what the JVM built before.
+    * appearance, lambda classes without addresses, RDD call sites without
+    * source lines and the per-JVM [[SparkEntry.scratchRoot]] as
+    * `<scratch>`: a plan's text does not depend on what the JVM built
+    * before, nor on which JVM built it.
     */
   def planText(df: DataFrame): String = {
     val seen = scala.collection.mutable.Map.empty[(String, String), Int]
     Counter.replaceAllIn(df.queryExecution.explainString(FormattedMode)
+      .replace(SparkEntry.scratchRoot.toString, "<scratch>")
       .replaceAll("""\$\$Lambda[^\s,)\]]*@[0-9a-f]+""", "\\$\\$Lambda")
       .replaceAll("""(RDD\[\d+\] at \w+) at [\w$.]+:\d+""", "$1"), { m =>
       val kind = m.group(1)
       val n = seen.getOrElseUpdate((kind, m.group(2)), seen.keys.count(_._1 == kind) + 1)
       scala.util.matching.Regex.quoteReplacement(s"$kind$n")
     })
+  }
+
+  /** The audit's round label: `N` of an `EXPLAIN_rN` output name (leading
+    * zeros dropped), else the output file's base name.
+    */
+  def roundLabel(outFile: String): String = {
+    val name = java.nio.file.Paths.get(outFile).getFileName.toString
+    """EXPLAIN_r0*(\d+)""".r.findFirstMatchIn(name).fold(name)(_.group(1))
   }
 
   def main(args: Array[String]): Unit = {
@@ -48,7 +59,7 @@ object ExplainAudit {
     val spark = GraftSession("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
 
-    val round = outFile.replaceAll("""^.*EXPLAIN_r0*(\d+).*$""", "$1")
+    val round = roundLabel(outFile)
     val sb = new StringBuilder
     def section(title: String, df: DataFrame): Unit =
       sb ++= s"## $title\n\n```\n${planText(df)}```\n\n"

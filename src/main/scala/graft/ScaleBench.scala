@@ -1077,15 +1077,12 @@ object ScaleBench {
       // the flagship index build under MANIFEST replication (r16 judge
       // task 8): the reference corpus's 355 files each listed f times —
       // every replica is a distinct document (positional ids), so postings
-      // lists grow ×f at constant vocabulary. Times the two sinks over the
-      // SAME materialized postings: writeExact shuffles the rows once by
-      // first letter, each of its reduce tasks merges, ranks and formats
-      // the letters it owns, and the driver collects the 26 files' bytes
-      // and writes them, so its cost is index-sized (vocab × postings —
-      // grows ×f here) and at most as parallel as the letters hash into
-      // tasks; writePartitioned ranks inside its 26-way partitioned text
-      // write. If exact_sec bends superlinearly, prefer the partitioned
-      // sink at scale.
+      // lists grow ×f at constant vocabulary. Times one run of the paper's
+      // job, `Engine.buildIndex`: the scan tokenizes its bins, the rows
+      // shuffle once by first letter, and each reduce task merges, ranks
+      // and writes the letter files it owns, so the sink's work and IO run
+      // as parallel as the letters hash into tasks. `postings` counts the
+      // lines written (one per distinct word), outside the timer.
       val baseDir = "/root/reference/checker"
       if (want("index_build") && !new java.io.File(s"$baseDir/test.txt").exists()) {
         Console.err.println(s"WARN: $baseDir/test.txt missing: skipped index_build (factor $f)")
@@ -1099,22 +1096,14 @@ object ScaleBench {
       val body = (Seq((names.size * f).toString) ++ Seq.fill(f)(names).flatten)
         .mkString("", "\n", "\n")
       java.nio.file.Files.write(mf, body.getBytes("UTF-8"))
-      var postings: DataFrame = null
-      val buildSec = time {
-        postings = Engine.indexFromManifest(spark, mf.toString, baseDir)
-          .pin()
-      }
-      val nPost = postings.count()
-      val exactSec = time {
-        graft.sources.LetterSink.writeExact(postings, tmp.resolve("exact").toString)
-      }
-      val partSec = time {
-        graft.sources.LetterSink.writePartitioned(postings, tmp.resolve("part").toString)
-      }
+      var written: Seq[String] = Nil
+      val sec = time { written = Engine.buildIndex(spark, mf.toString, baseDir, tmp.resolve("index").toString) }
+      val nPost = written.map { p =>
+        val lines = java.nio.file.Files.lines(java.nio.file.Paths.get(p))
+        try lines.count() finally lines.close()
+      }.sum
       println(
-        s"""{"pipeline":"index_build","factor":$f,"mode":"linear","sec":${f"${buildSec + exactSec + partSec}%.3f"},""" +
-        s""""build_sec":${f"$buildSec%.3f"},"exact_sec":${f"$exactSec%.3f"},""" +
-        s""""part_sec":${f"$partSec%.3f"},"postings":$nPost}""")
+        s"""{"pipeline":"index_build","factor":$f,"mode":"linear","sec":${f"$sec%.3f"},"postings":$nPost}""")
       // the written index is per-factor scratch (a few MB × f)
       rmTree(tmp)
       clearExcept(Set.empty)

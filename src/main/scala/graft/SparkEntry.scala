@@ -110,18 +110,31 @@ object SparkEntry {
     */
   private def round(c: Column, n: Int): Column = graft.functions.Portable.pround(c, n)
 
-  /** Fixed per-(purpose, sf) scratch directory, wiped and recreated on each
-    * call: queries that materialize an index snapshot or corpus copy reuse
-    * ONE path across repeated verify/bench sweeps instead of leaking a new
-    * temp dir per invocation (ADVICE r11). */
-  private def scratch(name: String, dir: String): String = {
-    val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft-scratch",
-      s"$name-${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
+  /** This JVM's scratch root: created once, named by the process id plus a
+    * random suffix, and removed at JVM exit, so two JVMs never share a
+    * scratch path (two runs on one sf dir used to delete each other's
+    * files).
+    */
+  private[graft] lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory(s"graft-scratch-${ProcessHandle.current().pid()}-")
+    sys.addShutdownHook(deleteTree(root))
+    root
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(java.nio.file.Files.delete(_))
     }
+
+  /** Fixed per-(purpose, sf) scratch directory under [[scratchRoot]], wiped
+    * and recreated on each call: queries that materialize an index snapshot
+    * or corpus copy reuse ONE path across repeated verify/bench sweeps
+    * instead of leaking a new temp dir per invocation (ADVICE r11). */
+  private[graft] def scratch(name: String, dir: String): String = {
+    val p = scratchRoot.resolve(s"$name-${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
+    deleteTree(p)
     java.nio.file.Files.createDirectories(p)
     p.toString
   }
@@ -130,8 +143,9 @@ object SparkEntry {
     * named in-box format, re-read it with a DECLARED schema (inference
     * re-scans and can widen types), and aggregate per lang with an md5
     * content checksum — values, not just counts, must survive. The scratch
-    * dir is FIXED per (format, sf) and overwritten, so repeated verify/bench
-    * sweeps reuse the path instead of leaking a corpus copy per invocation.
+    * dir is FIXED per (format, sf) under [[scratchRoot]] and overwritten, so
+    * repeated verify/bench sweeps reuse the path instead of leaking a corpus
+    * copy per invocation.
     */
   private def formatRoundtrip(s: SparkSession, dir: String, fmt: String): DataFrame = {
     import org.apache.spark.sql.types._
@@ -140,7 +154,7 @@ object SparkEntry {
       StructField("doc_id", LongType), StructField("lang", StringType),
       StructField("source", StringType), StructField("n_chars", LongType),
       StructField("text", StringType)))
-    val base = s"${sys.props("java.io.tmpdir")}/graft-scratch/fmt-$fmt-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val base = scratchRoot.resolve(s"fmt-$fmt-${dir.replaceAll("[^A-Za-z0-9.]", "_")}").toString
     val rere = fmt match {
       case "json" =>
         docs.write.mode("overwrite").json(base)
@@ -232,13 +246,14 @@ object SparkEntry {
     //    aggregates over the union must see every row and account the
     //    missing-column mass exactly (the oracle derives the same from
     //    the source table, so a dropped row or phantom null breaks it)
-    //    Scratch path is FIXED per sf dir (the formatRoundtrip pattern):
+    //    Scratch path is FIXED per sf dir under scratchRoot (the
+    //    formatRoundtrip pattern):
     //    mode("overwrite") makes repeated bench/verify invocations reuse
     //    the same two batches instead of leaking a fresh tempdir pair of
     //    the documents table per run (r13 advice).
     QueryDef("q_schema_evolution", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val out = s"${sys.props("java.io.tmpdir")}/graft-scratch/schevo-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val out = scratchRoot.resolve(s"schevo-${dir.replaceAll("[^A-Za-z0-9.]", "_")}").toString
       docs.where(col("doc_id") < 250)
         .select("doc_id", "lang", "n_chars")
         .write.mode("overwrite").parquet(s"$out/b1")

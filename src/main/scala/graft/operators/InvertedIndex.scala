@@ -51,17 +51,6 @@ object InvertedIndex {
       .withColumn("df", size(col("doc_ids")))
       .withColumn("letter", substring(col("word"), 1, 1))
 
-  /** Rank postings within each letter bucket by df DESC, word ASC
-    * (reference comparator src/main.cpp:225-231). Returns a DataFrame whose
-    * partitioning is 26-way by letter with rows sorted inside each bucket —
-    * the distributed analogue of the reference's per-letter sort stage, and
-    * the ranking [[graft.sources.LetterSink.writePartitioned]] writes.
-    */
-  def rankedWithinLetters(postings: DataFrame): DataFrame =
-    postings
-      .repartition(26, col("letter"))
-      .sortWithinPartitions(col("letter"), desc("df"), asc("word"))
-
   /** Globally-ordered ranking (letter ASC, df DESC, word ASC) — the oracle-
     * comparable total order over the whole index.
     */

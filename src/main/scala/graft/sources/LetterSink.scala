@@ -1,8 +1,10 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import java.util
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
@@ -17,51 +19,44 @@ import org.apache.spark.unsafe.types.UTF8String
   * 1-based, ascending), lines ordered df DESC then word ASC, and EMPTY
   * buckets still emit an (empty) file.
   *
-  * Two variants:
-  *  - `writeExact`: the reference's reduce phase (src/main.cpp:172-236).
-  *    It takes rows of `(word, doc_ids)` whose lists are each ascending;
-  *    one word may span several rows, and its line carries the sorted
-  *    distinct union of its lists, so a build feeds the scan's per-bin
-  *    partial rows and a merge feeds the old snapshot's rows next to the
-  *    delta's. The rows shuffle once by first letter, each reduce task owns
-  *    whole letters and merges, ranks and formats them, and the driver
-  *    writes the 26 returned files under their exact golden names.
-  *  - `writePartitioned`: fully distributed `partitionBy("letter")` text write
-  *    for at-scale use, where exact filenames don't matter but parallel IO does.
+  * `writeExact` is the reference's reduce phase (src/main.cpp:172-236). It
+  * takes rows of `(word, doc_ids)` whose lists are each ascending; one word
+  * may span several rows, and its line carries the sorted distinct union of
+  * its lists, so a build feeds the scan's per-bin partial rows and a merge
+  * feeds the old snapshot's rows next to the delta's. The rows shuffle once
+  * by first letter, and each reduce task owns whole letters: it merges,
+  * ranks and formats them and writes their files itself.
   */
 object LetterSink {
 
-  private def formatted(postings: DataFrame): DataFrame =
-    postings.select(
-      col("letter"),
-      col("df"),
-      col("word"),
-      concat(col("word"), lit(":["), array_join(col("doc_ids"), " "), lit("]")).as("line"))
-
-  /** Exact sink: returns the 26 output paths.
+  /** Exact sink: returns the 26 output paths, a…z.
     *
     * One letter exchange into `defaultParallelism` partitions (the count the
     * scan bins by; given explicitly, so AQE cannot fold the small exchange
-    * into one task), then one job whose tasks each return the bytes of the
-    * letter files they own. Rows whose word does not start with a-z are
-    * dropped; an empty letter still gets an (empty) file, as x.txt is empty
-    * in the golden output.
+    * into one task), then one job whose tasks each write the files of the
+    * letters they own and return those letters. Each file goes through a
+    * temp file named by the task attempt and an atomic rename, so a retried
+    * or speculative attempt rewrites identical bytes and a reader never sees
+    * a partial file. Executors write with `java.nio`, so they must see
+    * `outDir` at the driver's path, as the manifest scan already requires of
+    * the corpus. Rows whose word does not start with a-z are dropped; the
+    * driver writes an empty file for every letter no task wrote, as x.txt is
+    * empty in the golden output.
     */
   def writeExact(postings: DataFrame, outDir: String): Seq[String] = {
     val out = Paths.get(outDir)
     Files.createDirectories(out)
+    val dir = out.toAbsolutePath.toString
     val byLetter = postings
       .select(col("word"), col("doc_ids").cast(ArrayType(LongType)))
       .repartition(postings.sparkSession.sparkContext.defaultParallelism, substring(col("word"), 1, 1))
     val qe = byLetter.queryExecution
-    val files = SQLExecution.withNewExecutionId(qe, Some("LetterSink.writeExact")) {
-      qe.toRdd.mapPartitions(reduceLetters).collect()
-    }
-    val bodies = Array.fill(26)(Array.emptyByteArray)
-    files.foreach { case (letter, body) => bodies(letter) = body }
-    ('a' to 'z').map { ch =>
-      val p = out.resolve(s"$ch.txt")
-      Files.write(p, bodies(ch - 'a'))
+    val written = SQLExecution.withNewExecutionId(qe, Some("LetterSink.writeExact")) {
+      qe.toRdd.mapPartitions(reduceLetters(_, dir)).collect()
+    }.toSet
+    (0 until 26).map { l =>
+      val p = out.resolve(s"${('a' + l).toChar}.txt")
+      if (!written(l)) Files.write(p, Array.emptyByteArray)
       p.toString
     }
   }
@@ -95,12 +90,12 @@ object LetterSink {
   private val byRank: util.Comparator[Entry] = (x, y) =>
     if (x.df != y.df) Integer.compare(y.df, x.df) else x.word.binaryCompare(y.word)
 
-  /** One reduce task: merges the lists of each word it receives, then ranks
-    * and formats each of its letters. Returns (letter - 'a', file bytes) for
-    * every non-empty letter. Shuffle rows are reused buffers, so the word
-    * and the ids are copied.
+  /** One reduce task: merges the lists of each word it receives, then ranks,
+    * formats and writes each of its letters into `dir`. Returns the index
+    * (letter - 'a') of every letter it wrote. Shuffle rows are reused
+    * buffers, so the word and the ids are copied.
     */
-  private def reduceLetters(rows: Iterator[InternalRow]): Iterator[(Int, Array[Byte])] = {
+  private def reduceLetters(rows: Iterator[InternalRow], dir: String): Iterator[Int] = {
     val words = new util.HashMap[UTF8String, Entry]()
     rows.foreach { r =>
       if (!r.isNullAt(0)) {
@@ -115,11 +110,16 @@ object LetterSink {
     }
     val letters = Array.fill(26)(new util.ArrayList[Entry]())
     words.values.forEach { e => e.union(); letters(e.word.getByte(0) - 'a').add(e) }
+    val attempt = TaskContext.get().taskAttemptId()
     (0 until 26).iterator.filter(!letters(_).isEmpty).map { l =>
       letters(l).sort(byRank)
       val out = new LineBuffer
       letters(l).forEach(out.line)
-      l -> out.bytes
+      val name = s"${('a' + l).toChar}.txt"
+      val tmp = Paths.get(dir, s".$name.$attempt.tmp")
+      out.writeTo(tmp)
+      Files.move(tmp, Paths.get(dir, name), ATOMIC_MOVE, REPLACE_EXISTING)
+      l
     }
   }
 
@@ -164,7 +164,10 @@ object LetterSink {
       put('\n'.toByte)
     }
 
-    def bytes: Array[Byte] = util.Arrays.copyOf(buf, len)
+    def writeTo(p: Path): Unit = {
+      val os = Files.newOutputStream(p)
+      try os.write(buf, 0, len) finally os.close()
+    }
   }
 
   /** Incremental maintenance of an ON-DISK letter index: read the existing
@@ -190,26 +193,4 @@ object LetterSink {
       .select(col("word"), col("doc_ids"))
     writeExact(existing.unionByName(delta.select(col("word"), col("doc_ids"))), outDir)
   }
-
-  /** Distributed sink: dir-per-letter text write (`letter=a/part-*.txt`).
-    *
-    * Ranks through [[graft.operators.InvertedIndex.rankedWithinLetters]],
-    * whose in-partition sort leads with `letter` deliberately: the dynamic
-    * partitioned write requires rows clustered by the partition column,
-    * and when the child ordering doesn't already provide that, the
-    * planner inserts its OWN sort on `letter` alone — which is not
-    * guaranteed stable, so the (df DESC, word ASC) line order inside
-    * each letter could be scrambled. Leading with `letter` satisfies the
-    * write requirement up front, no extra sort is planned, and each
-    * letter's file carries the exact reference line order — pinned
-    * byte-equal by LetterSinkSpec to the plain-Scala reference model on
-    * the hand-built corpus, and to [[writeExact]] on both golden corpora.
-    */
-  def writePartitioned(postings: DataFrame, outDir: String): Unit =
-    graft.operators.InvertedIndex.rankedWithinLetters(formatted(postings))
-      .select("letter", "line")
-      .write
-      .mode("overwrite")
-      .partitionBy("letter")
-      .text(outDir)
 }

@@ -312,6 +312,28 @@ class AuditLintSpec extends SparkSpec {
     assert(ExplainAudit.planText(first) == ExplainAudit.planText(second))
   }
 
+  test("the audit's round label is the EXPLAIN_rN number, else the file's base name") {
+    assert(ExplainAudit.roundLabel("EXPLAIN_r07.md") == "7")
+    assert(ExplainAudit.roundLabel("/x/EXPLAIN_parent.md") == "EXPLAIN_parent.md")
+    assert(ExplainAudit.roundLabel("/x/EXPLAIN_r3/audit.md") == "audit.md")
+  }
+
+  test("scratch dirs live under a root unique to this process, wiped on each call") {
+    // a second JVM cannot be started here; its root carries its own pid
+    // and a fresh random suffix, so two sessions never resolve one path
+    val root = SparkEntry.scratchRoot
+    assert(java.nio.file.Files.isDirectory(root))
+    assert(root.getFileName.toString.startsWith(s"graft-scratch-${ProcessHandle.current().pid()}-"), root)
+    val p = java.nio.file.Paths.get(SparkEntry.scratch("spec", "/x/sf0.001"))
+    assert(p.getParent == root && p.getFileName.toString == "spec-_x_sf0.001")
+    java.nio.file.Files.write(p.resolve("stale"), Array[Byte](1))
+    assert(SparkEntry.scratch("spec", "/x/sf0.001") == p.toString)
+    assert(p.toFile.list().isEmpty, "scratch must wipe the directory it hands out")
+    // the audit's plan text names the root as <scratch>, the same in every JVM
+    val text = ExplainAudit.planText(spark.read.text(p.toString))
+    assert(text.contains("<scratch>/spec-_x_sf0.001") && !text.contains(root.toString), text)
+  }
+
   test("the lint flags a seeded violation (vocabulary-wide row_number)") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val bad = graft.operators.Tokenize.tokens(docs, "text", Seq("doc_id"))

@@ -1,7 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.RewriteSortedCollectSet
@@ -52,5 +60,30 @@ class GraftSessionSpec extends SparkSpec {
       SparkSession.setActiveSession(shared)
       SparkSession.setDefaultSession(shared)
     }
+  }
+
+  test("a global window on the shared session logs no 'No Partition Defined' warning") {
+    val seen = new ConcurrentLinkedQueue[String]
+    val probe = new AbstractAppender("graft-window-warn-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    probe.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(probe, null, null)
+    ctx.updateLoggers()
+    try {
+      // the probe sees WARN lines: one from a logger the session leaves alone
+      LogManager.getLogger("graft.GraftSessionSpec").warn("probe line")
+      val ranked = spark.range(50).withColumn("rk", row_number().over(Window.orderBy(desc("id"))))
+      assert(ranked.where(col("rk") === 1).head().getLong(0) == 49L)
+    } finally {
+      root.removeAppender(probe.getName)
+      ctx.updateLoggers()
+      probe.stop()
+    }
+    val lines = seen.asScala.toSeq
+    assert(lines.exists(_.endsWith("probe line")), s"the probe saw no WARN line: $lines")
+    assert(!lines.exists(_.contains("No Partition Defined")), lines.mkString("\n"))
   }
 }

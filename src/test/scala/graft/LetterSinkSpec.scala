@@ -10,7 +10,6 @@ import org.apache.spark.TestParallelism.withDefaultParallelism
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
-import org.apache.spark.sql.functions._
 
 import graft.operators.{InvertedIndex, Tokenize}
 import graft.sources.LetterSink
@@ -18,75 +17,13 @@ import graft.sources.LetterSink
 /** The exact sink must rank and write the 26 letter files byte-for-byte like
   * the reference, on every host: a hand-built corpus under
   * `src/test/resources/ranking` is checked against a plain-Scala model of
-  * the reference, for the exact and the distributed sink alike, and so is
-  * the byte-adversarial corpus under `src/test/resources/bytes`; the
-  * exact sink's union of a word's rows and its job shape are pinned. The
-  * distributed sink must produce a letter-partitioned layout that supports
-  * partition pruning on read — the at-scale path where exact filenames stop
-  * mattering and parallel IO + pruning start mattering.
+  * the reference, and so is the byte-adversarial corpus under
+  * `src/test/resources/bytes`; every such check also asserts that the
+  * output directory holds the 26 letter files and nothing else. The exact
+  * sink's union of a word's rows, its rewrite of a used directory and its
+  * job shape are pinned.
   */
 class LetterSinkSpec extends SparkSpec {
-
-  test("writePartitioned emits letter=* dirs and reads back with partition pruning") {
-    val postings = InvertedIndex.postings(
-      Tokenize.tokens(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "text", Seq("doc_id")))
-    val out = Files.createTempDirectory("graft-partsink").toString
-    LetterSink.writePartitioned(postings, out)
-
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.nonEmpty && dirs.forall(_.startsWith("letter=")))
-
-    val back = spark.read.text(out) // partition column `letter` inferred from layout
-    val one  = back.where(col("letter") === "s")
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("letter"),
-      s"expected letter partition pruning in:\n$plan")
-    // pruned read returns exactly the s-bucket lines, formatted word:[ids]
-    val lines = one.select("value").collect().map(_.getString(0))
-    assert(lines.nonEmpty && lines.forall(_.matches("[a-z]+:\\[[0-9 ]+\\]")))
-    assert(lines.forall(_.startsWith("s")))
-  }
-
-  test("writePartitioned content == writeExact bytes per letter, on both golden corpora") {
-    // the cluster-scale write path inherits the golden guarantee: for each
-    // letter, the concatenated part files (filename order) must be BYTE
-    // EQUAL to writeExact's <letter>.txt — same lines, same (df DESC, word
-    // ASC) order, same trailing newline; a letter with no postings has no
-    // letter= dir and writeExact's file is empty
-    val refBase = "/root/reference/checker"
-    for ((manifest, tag) <- Seq("test_small.txt" -> "small", "test.txt" -> "large")) {
-      val postings = Engine.indexFromManifest(spark, s"$refBase/$manifest", refBase)
-      val exactDir = Files.createTempDirectory(s"graft-parity-exact-$tag").toString
-      val partDir  = Files.createTempDirectory(s"graft-parity-part-$tag").toString
-      LetterSink.writeExact(postings, exactDir)
-      LetterSink.writePartitioned(postings, partDir)
-      ('a' to 'z').foreach { ch =>
-        val exact = new String(
-          Files.readAllBytes(java.nio.file.Paths.get(exactDir, s"$ch.txt")), "UTF-8")
-        val d = new java.io.File(partDir, s"letter=$ch")
-        val part =
-          if (!d.isDirectory) ""
-          else d.listFiles()
-            .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-            .sortBy(_.getName)
-            .map(f => new String(Files.readAllBytes(f.toPath), "UTF-8"))
-            .mkString
-        assert(part == exact, s"$tag: letter '$ch' distributed bytes != exact bytes")
-      }
-    }
-  }
-
-  /** Concatenated part-file bytes for one letter of a partitioned snapshot. */
-  private def partBytes(dir: String, ch: Char): String = {
-    val d = new java.io.File(dir, s"letter=$ch")
-    if (!d.isDirectory) ""
-    else d.listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-      .sortBy(_.getName)
-      .map(f => new String(Files.readAllBytes(f.toPath), "UTF-8"))
-      .mkString
-  }
 
   test("mergePartitioned == mergeExact per letter, snapshots immutable, on both golden corpora") {
     val refBase = "/root/reference/checker"
@@ -186,23 +123,17 @@ class LetterSinkSpec extends SparkSpec {
     InvertedIndex.postings(Tokenize.tokens(deltaDocs.toDF("doc_id", "text"), "text", Seq("doc_id")))
   }
 
+  /** `dir` holds exactly `a.txt`…`z.txt` (no temp, checksum or marker
+    * files), each with `want`'s bytes, and `paths` lists them a…z.
+    */
   private def assertFiles(dir: String, paths: Seq[String], want: Map[Char, String]): Unit = {
     assert(paths == ('a' to 'z').map(ch => Paths.get(dir, s"$ch.txt").toString))
+    val names = new java.io.File(dir).list().sorted.toSeq
+    assert(names == ('a' to 'z').map(ch => s"$ch.txt"), s"$dir holds ${names.mkString(" ")}")
     ('a' to 'z').foreach { ch =>
       val got = Files.readAllBytes(Paths.get(dir, s"$ch.txt"))
       assert(got.sameElements(want(ch).getBytes(UTF_8)),
         s"$ch.txt:\n${new String(got, UTF_8)}--- want:\n${want(ch)}")
-    }
-  }
-
-  /** A partitioned snapshot holds exactly the letters `want` fills, each
-    * with `want`'s bytes.
-    */
-  private def assertParts(dir: String, want: Map[Char, String]): Unit = {
-    val letters = new java.io.File(dir).list().filter(_.startsWith("letter=")).sorted.toSeq
-    assert(letters == want.filter(_._2.nonEmpty).keys.toSeq.sorted.map(ch => s"letter=$ch"))
-    ('a' to 'z').foreach { ch =>
-      assert(partBytes(dir, ch) == want(ch), s"letter=$ch:\n${partBytes(dir, ch)}--- want:\n${want(ch)}")
     }
   }
 
@@ -220,9 +151,6 @@ class LetterSinkSpec extends SparkSpec {
     assert(Seq('e', 'n', 's', 'y').forall(want(_).isEmpty))
     val out = Files.createTempDirectory("graft-rank-golden").toString
     assertFiles(out, LetterSink.writeExact(rankingPostings, out), want)
-    val part = Files.createTempDirectory("graft-rank-golden-part").toString
-    LetterSink.writePartitioned(rankingPostings, part)
-    assertParts(part, want)
   }
 
   test("mergeExact == the model's merged index, byte for byte, on the hand-built corpus") {
@@ -250,6 +178,17 @@ class LetterSinkSpec extends SparkSpec {
     val merged = Model.files(Model.merge(Model.postings(docs), Model.postings(deltaDocs)))
     val mergedOut = Files.createTempDirectory("graft-bytes-merged").toString
     assertFiles(mergedOut, LetterSink.mergeExact(spark, out, deltaPostings, mergedOut), merged)
+  }
+
+  test("buildIndex into a used directory rewrites every file, emptied letters included") {
+    // the byte-adversarial corpus fills letters the ranking corpus leaves
+    // empty: the second build must empty those files, not leave them stale
+    val first = Model.files(Model.postings(corpusDocs(bytesDir)))
+    val want = Model.files(Model.postings(rankingDocs))
+    assert(('a' to 'z').exists(ch => first(ch).nonEmpty && want(ch).isEmpty))
+    val out = Files.createTempDirectory("graft-rebuild").toString
+    assertFiles(out, Engine.buildIndex(spark, bytesDir.resolve("manifest.txt").toString, bytesDir.toString, out), first)
+    assertFiles(out, Engine.buildIndex(spark, rankingDir.resolve("manifest.txt").toString, rankingDir.toString, out), want)
   }
 
   test("writeExact ranks words in Spark's binary UTF-8 order and drops letters outside a-z") {

@@ -46,12 +46,6 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("ranked-within-letters index = exactly two shuffles (agg + letter repartition)") {
-    val ranked = InvertedIndex.rankedWithinLetters(Engine.indexFromTable(docs))
-    assert(exchanges(ranked) == 2,
-      s"ranked index should shuffle twice:\n${ranked.queryExecution.executedPlan}")
-  }
-
   test("index-served AND/OR: words pushed into the scan, no shuffle; live AND keeps its shuffles") {
     val terms = Seq("spark", "query", "join")
     val dir = java.nio.file.Files.createTempDirectory("graft-plan-shape-idx").toString
